@@ -12,29 +12,122 @@ import org.apache.spark.sql.types._
   * load-bearing for the DuckDB differential oracle (SURVEY.md §1.4):
   *
   *  1. `events.ts` is parquet TIMESTAMP(NANOS); Spark 4.x refuses it unless
-  *     `spark.sql.legacy.parquet.nanosAsLong=true`, after which we rebuild a
-  *     µs timestamp with integer division — exactly the truncation DuckDB
-  *     applies when it reads the same column.
+  *     `spark.sql.legacy.parquet.nanosAsLong=true` (set by [[pin]]), after
+  *     which we rebuild a µs timestamp with integer division — exactly the
+  *     truncation DuckDB applies when it reads the same column.
   *  2. `embeddings.embedding` is list<float>; cast to array<double> once at
   *     scan so similarity math happens in the same precision in both engines.
+  *
+  * Every file read goes through [[read]], which infers a file's schema once
+  * per file stamp (see [[read]]), so warm requests resolve their tables
+  * without a Spark schema-inference job.
   */
 object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** The fixture parquet carries isAdjustedToUTC=false timestamps; Spark 4
-    * would infer TIMESTAMP_NTZ (and whether it does can vary with session
-    * conf touched by other queries). Pin inference OFF so every scan yields
-    * TimestampType in the UTC session — one stable type everywhere, equal
-    * to DuckDB's naive-µs reading of the same columns.
+  /** The reader confs every scan runs under:
+    *
+    *  - The fixture parquet carries isAdjustedToUTC=false timestamps; Spark 4
+    *    would infer TIMESTAMP_NTZ (and whether it does can vary with session
+    *    conf touched by other queries). Inference is pinned OFF so every scan
+    *    yields TimestampType in the UTC session — one stable type everywhere,
+    *    equal to DuckDB's naive-µs reading of the same columns.
+    *  - TIMESTAMP(NANOS) columns read as LongType (`events.ts`, shim 1).
+    *    The conf touches nothing else, and pinning it on every scan rather
+    *    than only on the events scan keeps a file's inferred schema
+    *    independent of which tables the session happened to read first.
     */
   private[graft] def pin(s: SparkSession): SparkSession = {
     s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s
   }
 
+  /** What a file looked like when its schema was inferred: the sorted
+    * recursive (path, length, mtime) listing of everything the path names.
+    * A file rewritten in place changes its length or mtime; a Spark
+    * rewrite of a directory writes new part-file names.
+    */
+  private type Stamp = Seq[(String, Long, Long)]
+
+  private final case class SlotKey(path: String, format: String,
+                                   options: Map[String, String])
+
+  private final case class Slot(stamp: Stamp, schema: StructType)
+
+  /** One inferred schema per (path, format, options), valid while the
+    * file stamp is the one it was inferred under. Every read runs under
+    * the [[pin]]ned reader confs, so a schema never depends on conf state
+    * the stamp does not see. Only `StructType`s live here, never plans or
+    * relations, so sharing it across requests leaves each request's
+    * private session and temp views untouched. Bounded: a process that
+    * reads more distinct paths than `MaxSlots` starts the cache over.
+    */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[SlotKey, Slot]()
+  private val MaxSlots = 4096
+
+  /** Stat through the session's Hadoop FileSystem, so object stores work
+    * like local paths. None when the path cannot be listed: the read then
+    * infers (and fails) exactly as an uncached read does.
+    */
+  private def stamp(s: SparkSession, path: String): Option[Stamp] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+      val roots = Option(fs.globStatus(p)).getOrElse(Array.empty)
+      if (roots.isEmpty) None
+      else Some(roots.toSeq.flatMap { st =>
+        if (!st.isDirectory) Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+        else {
+          val it = fs.listFiles(st.getPath, true)
+          val b = Seq.newBuilder[(String, Long, Long)]
+          while (it.hasNext) {
+            val f = it.next()
+            b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+          }
+          b.result()
+        }
+      }.sorted)
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Read `path` as `format`, inferring its schema only when the cached one
+    * is missing or its stamp has changed; otherwise the cached schema is
+    * passed with `.schema`, which starts no Spark job. The stamp is taken BEFORE inference, so a
+    * file that changes while its schema is inferred reads as stale next
+    * time.
+    */
+  private[graft] def read(s: SparkSession, path: String, format: String = "parquet",
+                          options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = pin(s).read.format(format).options(options)
+    val key = SlotKey(path, format, options)
+    stamp(s, path) match {
+      case None => reader.load(path)
+      case Some(st) =>
+        Option(schemas.get(key)).filter(_.stamp == st) match {
+          case Some(sl) => reader.schema(sl.schema).load(path)
+          case None =>
+            val df = reader.load(path)
+            if (schemas.size >= MaxSlots) schemas.clear()
+            schemas.put(key, Slot(st, df.schema))
+            df
+        }
+    }
+  }
+
+  /** The schema last inferred for (path, format, options), without
+    * checking the file — for translate-time column resolution, which has
+    * no session. Every request that reads the file refreshes it first.
+    */
+  private[graft] def cachedSchema(path: String, format: String,
+                                  options: Map[String, String]): Option[StructType] =
+    Option(schemas.get(SlotKey(path, format, options))).map(_.schema)
+
+  /** Forget every inferred schema, as a new JVM would start (test seam). */
+  private[graft] def clearSchemaCache(): Unit = schemas.clear()
+
   def load(s: SparkSession, dir: String, name: String): DataFrame =
-    pin(s).read.parquet(path(dir, name))
+    read(s, path(dir, name))
 
   def region(s: SparkSession, d: String)   = load(s, d, "region")
   def nation(s: SparkSession, d: String)   = load(s, d, "nation")
@@ -54,8 +147,7 @@ object Tables {
     * through. Both land on the same TimestampType column DuckDB sees.
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = pin(s).read.parquet(path(dir, "events"))
+    val raw = read(s, path(dir, "events"))
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _        => raw
@@ -64,8 +156,7 @@ object Tables {
 
   /** float→double vector cast at scan (SURVEY.md §1.4.2). */
   def embeddings(s: SparkSession, dir: String): DataFrame =
-    pin(s).read
-      .parquet(path(dir, "embeddings"))
+    read(s, path(dir, "embeddings"))
       .withColumn("embedding", expr("transform(embedding, x -> cast(x as double))"))
 
   /** Fan a small scan out to the session's full parallelism before

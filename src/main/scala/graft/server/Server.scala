@@ -69,13 +69,18 @@ object Server {
     * literal binding, never string splicing); non-SQL dialects reject
     * params loudly rather than ignore them.
     */
-  def handle(s: SparkSession, req: ServeRequest): DataFrame = {
+  def handle(s: SparkSession, req: ServeRequest): DataFrame =
+    handleIn(s, s.newSession(), req)
+
+  /** [[handle]] inside a request session the caller owns (`sess`, a
+    * `newSession()` of `s`), so the caller can release its views.
+    */
+  private def handleIn(s: SparkSession, sess: SparkSession, req: ServeRequest): DataFrame = {
     // cross-process coherence (round 17): observe peer replicas' dataset
     // registrations/unregistrations before resolving this request's
     // tables — one single-row stamp SELECT when nothing changed, a no-op
     // without an attached catalog
     DatasetRegistry.syncIfStale(Some(s))
-    val sess = s.newSession()
     req.dialect.toLowerCase match {
       case "sql" =>
         TableRegistry.registerAll(sess, req.dir)
@@ -237,7 +242,16 @@ object Server {
     * explain=true {"columns": [...], "plan": "..."} (no execution), or
     * {"error": "..."}.
     */
-  def handleJson(s: SparkSession, body: String): String = {
+  def handleJson(s: SparkSession, body: String): String =
+    handleJson(s, s.newSession(), body)
+
+  /** [[handleJson]] in the request session `sess` (a `newSession()` of
+    * `s`). The session outlives the request: AQE pool threads started by
+    * its queries inherit it as their active session until they idle out.
+    * So its temp views (every table's relation) are dropped once the
+    * response is rendered; `s`'s own views are never touched.
+    */
+  private[graft] def handleJson(s: SparkSession, sess: SparkSession, body: String): String = {
     // metering wraps the WHOLE request (parse + translate + execute +
     // render); a request that fails before its dialect parses meters
     // under "invalid" — Metrics closes the key space
@@ -286,8 +300,8 @@ object Server {
       // group so the watchdog can cancel a runaway execution; explain
       // stays planning-only (no job ever starts under it)
       val dialect = req("dialect")
-      withJobTimeout(s, s"$dialect /query") {
-        val df = handle(s,
+      try withJobTimeout(s, s"$dialect /query") {
+        val df = handleIn(s, sess,
           ServeRequest(dialect, req("query"), req("dir"), maxRows, params))
         // {"explain": true} returns the formatted physical plan INSTEAD of
         // rows — the console's plan-inspection mode. Planning only: the
@@ -302,7 +316,7 @@ object Server {
           out.put("plan", plan)
           mapper.writeValueAsString(out)
         } else render(df, maxRows)
-      }
+      } finally if (sess ne s) sess.sessionState.catalog.clearTempTables()
     } catch {
       case e: Throwable =>
         failed = true

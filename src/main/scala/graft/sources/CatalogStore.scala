@@ -82,7 +82,6 @@ object CatalogStore {
     */
   def registerAll(s: SparkSession, file: Path): Unit =
     load(file).foreach { e =>
-      s.read.format(e.format).options(e.options).load(e.path)
-        .createOrReplaceTempView(e.name)
+      graft.Tables.read(s, e.path, e.format, e.options).createOrReplaceTempView(e.name)
     }
 }

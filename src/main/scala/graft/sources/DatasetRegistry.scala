@@ -50,8 +50,9 @@ object DatasetRegistry {
     * multi-replica shape): compare the catalog's global write stamp
     * against the last value this process saw; when it moved, reconcile
     * the process registry against the durable rows — peer REGISTRATIONS
-    * appear (with their schema-cache slot invalidated if the entry
-    * changed under the same name), peer UNREGISTRATIONS vanish. Called at
+    * appear (an entry re-pointed under the same name resolves its new
+    * path on the next load: schemas are cached per path and file stamp,
+    * not per name), peer UNREGISTRATIONS vanish. Called at
     * the serving read paths, so a replica observes its peers' writes on
     * the next request, not at its next restart. Cost when nothing
     * changed: one single-row SELECT on the catalog connection. No-op
@@ -72,17 +73,9 @@ object DatasetRegistry {
         val seq = JdbcCatalog.readSeq(c)
         if (seq != lastSeenSeq) {
           val rows = JdbcCatalog.load(c)
-          val byName = rows.map(e => e.name -> e).toMap
-          TableRegistry.dynamicEntries.foreach { cur =>
-            byName.get(cur.name) match {
-              case Some(row) if row != cur =>
-                // same name, different location/format: drop the stale
-                // schema-cache slot so the next load re-infers
-                TableRegistry.unregisterDynamic(cur.name)
-              case None => TableRegistry.unregisterDynamic(cur.name)
-              case _ => ()
-            }
-          }
+          val live = rows.map(_.name).toSet
+          TableRegistry.dynamicEntries.filterNot(e => live(e.name))
+            .foreach(e => TableRegistry.unregisterDynamic(e.name))
           rows.foreach(TableRegistry.registerDynamic)
           warmWith.foreach(warmSchemas)
           lastSeenSeq = seq
@@ -149,8 +142,9 @@ object DatasetRegistry {
     * schema-only read BEFORE any store is touched (round-14 ADVICE: a
     * registration with a bad path previously poisoned registerAll and
     * broke every SQL request server-wide until unregistered) — the probe
-    * also warms [[TableRegistry]]'s schema cache, so per-request view
-    * registration never re-infers.
+    * also warms the schema cache per path and file stamp, so per-request
+    * view registration re-infers only after the file changes. A failed
+    * probe caches nothing.
     */
   def register(e0: CatalogStore.Entry,
                validateWith: Option[SparkSession] = None): CatalogStore.Entry =
@@ -163,8 +157,7 @@ object DatasetRegistry {
       checkPathAllowed(e.path)
       validateWith.foreach { s =>
         try TableRegistry.loadEntry(s, e).schema
-        catch { case t: Throwable =>
-          TableRegistry.unregisterDynamic(e.name) // drop the probe's cache slot
+        catch { case scala.util.control.NonFatal(t) =>
           throw new IllegalArgumentException(
             s"dataset '${e.name}' is not loadable as ${e.format} at " +
               s"${e.path}: ${t.getMessage}")

@@ -480,7 +480,6 @@ object JdbcCatalog {
     */
   def registerAll(s: SparkSession, c: Connection): Unit =
     load(c).foreach { e =>
-      s.read.format(e.format).options(e.options).load(e.path)
-        .createOrReplaceTempView(e.name)
+      graft.Tables.read(s, e.path, e.format, e.options).createOrReplaceTempView(e.name)
     }
 }

@@ -9,6 +9,12 @@ import graft.Tables
   * file-backed loaders (with their scan shims) and projects them into the
   * Spark session catalog as temp views so SQL / GraphQL / NL dialects all
   * resolve the same relations.
+  *
+  * Every load reads through [[graft.Tables.read]]'s schema cache, keyed by
+  * (path, format, options) and valid per file stamp: a warm `registerAll`
+  * over unchanged files starts no Spark job, and a file rewritten in place
+  * is re-inferred on the next request that reads it. Only schemas are
+  * shared; each caller's session still gets its own relations and views.
   */
 object TableRegistry {
 
@@ -67,10 +73,8 @@ object TableRegistry {
     dynamic.put(e.name.toLowerCase, e.copy(name = e.name.toLowerCase))
   }
 
-  def unregisterDynamic(name: String): Boolean = {
-    schemaCache.remove(name.toLowerCase)
+  def unregisterDynamic(name: String): Boolean =
     dynamic.remove(name.toLowerCase) != null
-  }
 
   def isDynamic(name: String): Boolean = dynamic.containsKey(name.toLowerCase)
 
@@ -88,25 +92,17 @@ object TableRegistry {
     tables.keySet ++ dynamic.keySet.asScala
   }
 
-  /** Schema cache for dynamic datasets (round-14 ADVICE: registerAll runs
-    * on EVERY SQL serving request, and schema inference — a footer read
-    * for parquet, a full scan for inferSchema csv/json — was paid per
-    * request per healthy dataset). Filled by the register-time loadability
-    * probe or the first load; invalidated on unregister. O(registered
-    * datasets) StructTypes.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  /** A registered dataset's cached schema, when known (filled by the
-    * register-time loadability probe or the first load). Round 15: the NL
-    * translator's column-level productions over registered tables
+  /** A registered dataset's schema as last inferred for its (path, format,
+    * options), when known (filled by the register-time loadability probe or
+    * any load; refreshed by every load after the file changes). Round 15:
+    * the NL translator's column-level productions over registered tables
     * ("how many rows in X where COL is V") resolve columns and types here
     * at TRANSLATE time — no session, no data read — so a typo'd column
     * rejects loudly with the real column list before any plan exists.
     */
   def cachedSchema(name: String): Option[org.apache.spark.sql.types.StructType] =
-    Option(schemaCache.get(name.toLowerCase))
+    Option(dynamic.get(name.toLowerCase))
+      .flatMap(e => Tables.cachedSchema(e.path, e.format, e.options))
 
   /** DECLARED fixture-table schemas, AS THE DIALECTS SEE THEM (post-shim:
     * `events.ts` is the reconstructed µs timestamp, `embeddings.embedding`
@@ -154,20 +150,12 @@ object TableRegistry {
         "embedding" -> ArrayType(DoubleType), "label" -> IntegerType))
   }
 
-  /** Load a registration's data — schema-cached after the first read, so
-    * per-request view registration never re-infers. Public: the register
-    * path uses it as the loadability probe.
+  /** Load a registration's data — schema inferred once per file stamp, so
+    * per-request view registration re-infers only after the file changes.
+    * Public: the register path uses it as the loadability probe.
     */
-  def loadEntry(s: SparkSession, e: CatalogStore.Entry): DataFrame = {
-    val reader = Tables.pin(s).read.format(e.format).options(e.options)
-    Option(schemaCache.get(e.name)) match {
-      case Some(schema) => reader.schema(schema).load(e.path)
-      case None =>
-        val df = reader.load(e.path)
-        schemaCache.put(e.name, df.schema)
-        df
-    }
-  }
+  def loadEntry(s: SparkSession, e: CatalogStore.Entry): DataFrame =
+    Tables.read(s, e.path, e.format, e.options)
 
   def load(s: SparkSession, dir: String, name: String): DataFrame =
     tables.get(name).map(_(s, dir))
@@ -187,7 +175,7 @@ object TableRegistry {
     tables.foreach { case (name, fn) => fn(s, dir).createOrReplaceTempView(name) }
     dynamicEntries.foreach { e =>
       try loadEntry(s, e).createOrReplaceTempView(e.name)
-      catch { case t: Throwable =>
+      catch { case scala.util.control.NonFatal(t) =>
         System.err.println(s"[registry] dataset '${e.name}' is not loadable " +
           s"at ${e.path} (${t.getMessage}); skipping its view — unregister " +
           "or re-register it to clear this")

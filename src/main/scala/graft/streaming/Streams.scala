@@ -443,12 +443,12 @@ object Streams {
     */
   def readEventsStream(s: SparkSession, dir: String,
                        maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // schema inference MUST go through the same Tables.pin discipline as
-    // every batch scan (inferTimestampNTZ off): a µs fixture annotated
-    // isAdjustedToUTC=false would otherwise infer TIMESTAMP_NTZ here but
-    // TIMESTAMP in the batch plan — the streamed and batch results then
-    // carry different types depending on which path read first
+    // every batch scan (inferTimestampNTZ off, nanosAsLong on): a µs
+    // fixture annotated isAdjustedToUTC=false would otherwise infer
+    // TIMESTAMP_NTZ here but TIMESTAMP in the batch plan — the streamed
+    // and batch results then carry different types depending on which
+    // path read first
     val fileSchema = graft.Tables.pin(s).read.parquet(dir).schema
     val reader = s.readStream.schema(fileSchema)
     // bound each micro-batch's file quota (StreamRehearsal's latency leg:

@@ -98,6 +98,54 @@ class ConcurrencySpec extends AnyFunSuite {
     } finally api.stop()
   }
 
+  test("two dirs served at once: a same-name table with different columns answers per dir") {
+    // the schema cache is process-wide and keyed by path, so two dirs whose
+    // `region` differs in columns must never see each other's schema
+    val dirs = Seq("a", "b").map { tag =>
+      val dir = TestSpark.fixtureCopy(s"graft_conc_dir_$tag")
+      TestSpark.addColumn(dir, "region", s"r_$tag", tag.toUpperCase)
+      tag -> dir
+    }
+    val api = new Server.HttpApi(spark, 0)
+    api.start()
+    try {
+      val port = api.boundPort
+      val threads = 8
+      val pool = Executors.newFixedThreadPool(threads)
+      val start = new CountDownLatch(1)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val tasks = (0 until threads).map { t =>
+        pool.submit(new Runnable {
+          override def run(): Unit = {
+            val client = HttpClient.newHttpClient()
+            start.await()
+            (0 until 4).foreach { r =>
+              val (tag, dir) = dirs((t + r) % 2)
+              try {
+                val cols = mapper.readTree(post(client, port, "/query",
+                  s"""{"dialect":"sql","dir":"$dir","query":"SELECT * FROM region"}""")
+                  .body()).path("columns").elements().asScala.map(_.asText).toSeq
+                if (cols != Seq("r_regionkey", "r_name", s"r_$tag"))
+                  failures.add(s"sql in dir $tag got columns $cols")
+                val gql = mapper.readTree(post(client, port, "/query",
+                  s"""{"dialect":"graphql","dir":"$dir","query":"{ region { r_$tag } }"}""")
+                  .body())
+                val vals = gql.path("rows").elements().asScala.map(_.path(s"r_$tag").asText).toSeq
+                if (vals != Seq.fill(5)(tag.toUpperCase))
+                  failures.add(s"graphql in dir $tag got ${gql.toString.take(160)}")
+              } catch { case e: Exception => failures.add(s"t$t r$r: ${e.getMessage}") }
+            }
+          }
+        })
+      }
+      start.countDown()
+      tasks.foreach(_.get(120, TimeUnit.SECONDS))
+      pool.shutdown()
+      assert(failures.isEmpty, s"a dir saw another dir's schema: " +
+        failures.asScala.take(5).mkString("; "))
+    } finally api.stop()
+  }
+
   test("interleaved register/unregister under concurrent readers keeps the catalog consistent") {
     val catDb = Files.createTempDirectory("graft_conc_cat").resolve("db").toString
     val api = new Server.HttpApi(spark, 0, Some(catDb))

@@ -137,6 +137,32 @@ class ServingSpec extends AnyFunSuite {
     assert(badSql.has("error"))
   }
 
+  test("handleJson drops the request session's temp views once the response is rendered") {
+    // AQE pool threads keep a request's session alive after it returns, so
+    // its views (one relation per table) must not outlive the response
+    def views(s: org.apache.spark.sql.SparkSession) =
+      s.sessionState.catalog.getTempViewNames()
+    spark.range(1).createOrReplaceTempView("shared_view_keep")
+    try {
+      for (q <- Seq(
+        s"""{"dialect":"sql","query":"SELECT count(*) AS n FROM orders","dir":"$d"}""",
+        s"""{"dialect":"nl","query":"how many rows are in region","dir":"$d"}""",
+        s"""{"dialect":"sql","query":"SELECT FROM nothing","dir":"$d"}""")) {
+        val sess = spark.newSession()
+        val resp = mapper.readTree(Server.handleJson(spark, sess, q))
+        assert(resp.has("rows") || q.contains("nothing"), resp.toString)
+        assert(views(sess).isEmpty, s"request views left behind after $q")
+      }
+      // not vacuous: the same request through `handle`, which leaves the
+      // session to its caller, holds every table's view
+      val kept = Server.handle(spark,
+        Server.ServeRequest("sql", "SELECT count(*) AS n FROM orders", d))
+      assert(views(kept.sparkSession).contains("orders"))
+      assert(views(spark).contains("shared_view_keep"),
+        "the shared session's own views are never dropped")
+    } finally spark.catalog.dropTempView("shared_view_keep")
+  }
+
   // ---- HTTP E2E ---------------------------------------------------------
 
   test("HTTP API answers /health and runs all three dialects over POST /query") {
@@ -1148,9 +1174,10 @@ class ServingSpec extends AnyFunSuite {
       client2.send(req, HttpResponse.BodyHandlers.ofString())
     } finally api1.stop()
 
-    // simulate a new JVM: the process registry forgets the name AND its
-    // cached schema (unregisterDynamic clears both)
+    // simulate a new JVM: the process registry forgets the name, and the
+    // schema cache forgets every inferred schema
     TableRegistry.unregisterDynamic("warm_parts")
+    Tables.clearSchemaCache()
     val api2 = new Server.HttpApi(spark, 0, Some(catDb))
     api2.start()
     try {

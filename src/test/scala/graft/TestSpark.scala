@@ -18,4 +18,22 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A private copy of the fixture dir, for specs that rewrite its tables. */
+  def fixtureCopy(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    graft.sources.TableRegistry.tables.keys.foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(Tables.path(sfDir, t)),
+        dir.resolve(s"$t.parquet"))
+    }
+    dir.toString
+  }
+
+  /** Overwrite `dir`'s `table` with the fixture table plus one constant
+    * string column, the way a Spark job rewrites a table in place.
+    */
+  def addColumn(dir: String, table: String, column: String, value: String): Unit =
+    spark.read.parquet(Tables.path(sfDir, table))
+      .withColumn(column, org.apache.spark.sql.functions.lit(value))
+      .write.mode("overwrite").parquet(Tables.path(dir, table))
 }
