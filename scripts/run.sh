@@ -1,7 +1,8 @@
 #!/bin/bash
 # Run any graft main class against the compiled classes + Spark jars,
 # without sbt JVM startup. Usage: scripts/run.sh graft.Verify <args...>
-# Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM as usual.
+# Env: SPARK_MASTER / SPARK_GRAFT_CPUS (see graft.GraftSession),
+# SPARK_GRAFT_SF_DIR, SPARK_DRIVER_MEM.
 set -e
 cd "$(dirname "$0")/.."
 OPENS=""
@@ -11,6 +12,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" "$@"

@@ -114,19 +114,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same UTC pin as Verify/Serve/Cli: on a non-UTC host the
-      // day-bucketing keys would otherwise TIME different plans than the
-      // ones correctness verified
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
     // optional comma-separated key subset for targeted profiling
     val only = sys.env.get("SPARK_GRAFT_KEYS")
       .map(_.split(",").iterator.map(_.trim).filter(_.nonEmpty).toSet)

@@ -72,13 +72,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val a = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-cli")
     try {
       val out = run(spark, a)
       println(out)

@@ -213,14 +213,7 @@ object EdgeFixtures {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: graft.EdgeFixtures <srcSfDir> <outBase>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-edge-fixtures")
     generate(spark, args(0), args(1))
     println(s"[edgefixtures] wrote ${variants.mkString(", ")} under ${args(1)}")
     spark.stop()

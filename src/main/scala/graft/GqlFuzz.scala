@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.dialects.GraphQL
 
 /** GraphQL composition-matrix fuzzer (round-12 verdict item 6 — the
@@ -905,14 +904,7 @@ object GqlFuzz {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.GqlFuzz <sfDir> <outDir>")
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-gql-fuzz")
     new java.io.File(outDir).mkdirs()
 
     def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")

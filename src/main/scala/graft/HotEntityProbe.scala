@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Focused hot-entity experiment (round 11, verdict item 1's evidence row;
@@ -64,14 +63,7 @@ object HotEntityProbe {
     val measuredPairs =
       if (alt) Seq(("win_streaks", Some("streaks_bucketed")))
       else pairs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-hot-entity-probe")
 
     ns.foreach { n =>
       val dir = s"$outBase/hot_$n"

@@ -1330,9 +1330,11 @@ object MutantQueries {
   def byFixture: Map[String, Seq[Mutant]] = mutants.groupBy(_.fixture)
 }
 
-/** Verify's exact write path, but running the MUTANT queries against the
-  * requested fixture dir — so scripts/check.py compares each mutant to the
-  * real oracle and scripts/mutcheck.py asserts the compare FAILS.
+/** Verify's write path, running the MUTANT queries against the requested
+  * fixture dir — so scripts/check.py compares each mutant to the real
+  * oracle and scripts/mutcheck.py asserts the compare FAILS. A mutant that
+  * throws leaves no output, so the audit reports it did-not-run rather than
+  * crediting a kill from an earlier run's directory.
   */
 object MutantVerify {
   def main(args: Array[String]): Unit = {
@@ -1340,44 +1342,15 @@ object MutantVerify {
       "usage: graft.MutantVerify <sfDir> <outDir> [key ...]")
     val Array(sfDir, outDir, rest @ _*) = args
     val only: Set[String] = rest.iterator.map(_.trim).filter(_.nonEmpty).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    val selected = MutantQueries.mutants
-      .filter(m => only.isEmpty || only(m.key))
+    val spark = GraftSession("graft-mutant-verify")
     // output dirs are keyed (key, class), not key alone: round 10 added a
     // second mutant on several keys (the top-k value-perturbation class),
     // and same-key dirs would silently overwrite — the checker would then
-    // verify only the LAST mutant while crediting both as killed
-    selected.foreach { m =>
-      try m.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${MutantQueries.outName(m)}")
-      catch { case e: Throwable =>
-        System.err.println(s"[mutant] ${m.key} (${m.clazz}) failed: ${e.getMessage}")
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // each (key, class) output name maps to ITS base key's unchanged oracle
-    val json = selected
-      .flatMap(m => SparkEntry.oracleSql.get(m.key)
-        .map(sql => s"${q(MutantQueries.outName(m))}: ${q(sql)}"))
-      .mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
+    // verify only the LAST mutant while crediting both as killed. Each
+    // (key, class) output maps to ITS base key's unchanged oracle.
+    Verify.writeOutputs(spark, outDir, MutantQueries.mutants
+      .filter(m => only.isEmpty || only(m.key))
+      .map(m => (MutantQueries.outName(m), () => m.fn(spark, sfDir), m.key)))
     spark.stop()
   }
 }

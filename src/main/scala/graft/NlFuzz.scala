@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** NL composition-matrix fuzzer (round-10 verdict item 8).
   *
   * Rounds 8–10 each discovered BY HAND an NL composition whose halves
@@ -367,14 +365,7 @@ object NlFuzz {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.NlFuzz <sfDir> <outDir>")
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-nl-fuzz")
     new java.io.File(outDir).mkdirs()
 
     // round 15: the registered-dataset rows need a live registration with

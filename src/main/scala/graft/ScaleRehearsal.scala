@@ -228,14 +228,7 @@ object ScaleRehearsal {
       } else args(2)
     val scales = if (args.length > 3) args(3).split(",").map(_.toInt).toSeq
                  else Seq(1, 3, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-scale-rehearsal")
 
     // spill telemetry (round 14, verdict item 7): cumulative task-level
     // disk/memory spill, read as per-key deltas by timeKeys — the ×100

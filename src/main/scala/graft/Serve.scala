@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.server.Server
 
 /** Start the serving surface: the HTTP JSON API plus the browser console
@@ -12,13 +10,7 @@ import graft.server.Server
 object Serve {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-serve")
     // durable dataset catalog (POST /datasets + the registerDataset
     // mutation persist here; registrations survive restarts). Override
     // with GRAFT_CATALOG_DIR — an embedded Derby directory by default,

@@ -166,14 +166,7 @@ object StreamRehearsal {
     val whale = mode == "whale"
     val ttlMode = mode == "ttl"
     val timerMode = mode == "timer"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-stream-rehearsal")
 
     val sb = new StringBuilder
     sb.append("{\"src\":\"").append(src).append("\",\"mode\":\"")

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,54 +12,45 @@ object Verify {
     val only: Set[String] = rest.iterator.map(_.trim).filter(_.nonEmpty).toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // one state-store provider for EVERY stateful query, so behavior
-      // cannot depend on key execution order (stream_tws requires RocksDB)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // drop any partial/stale output so a failed query can never be
-        // mistaken for a (previously written) passing one
-        val dir = new java.io.File(s"$outDir/$name")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(dir)
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val spark = GraftSession("graft-verify")
     // a key-filtered debug run dumps only the selected keys' oracles, so
     // an unfiltered check.py over its output doesn't report the rest as
     // missing
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOutputs(spark, outDir, SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .map { case (name, fn) => (name, () => fn(spark, sfDir), name) })
     spark.stop()
+  }
+
+  /** Writes each (output name, query, oracle key) result to
+    * `outDir/<output name>` as one parquet file, and `outDir/oracle_sql.json`
+    * mapping each output name to its oracle key's DuckDB SQL in `oracles`
+    * (names whose key has no oracle are left out). A query that throws
+    * leaves no directory under its name, so a failed query can never be
+    * mistaken for a (previously written) passing one.
+    */
+  def writeOutputs(spark: SparkSession, outDir: String,
+                   outputs: Seq[(String, () => DataFrame, String)],
+                   oracles: Map[String, String] = SparkEntry.oracleSql): Unit = {
+    new java.io.File(outDir).mkdirs()
+    outputs.foreach { case (name, query, _) =>
+      try query().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        def rm(f: java.io.File): Unit = {
+          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+        }
+        rm(new java.io.File(s"$outDir/$name"))
+      }
+    }
+    // Jackson escapes every control character: a tab or CR in an oracle
+    // must not make the checker's json.load fail
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val json = mapper.createObjectNode()
+    outputs.foreach { case (name, _, key) =>
+      oracles.get(key).foreach(json.put(name, _))
+    }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      mapper.writeValueAsString(json))
   }
 }

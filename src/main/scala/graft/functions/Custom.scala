@@ -484,13 +484,14 @@ object Custom {
         .select(expr(phWbCase).as("wb"),
           expr("greatest(CAST(20 AS BIGINT), CAST(ceil(0.28 * sqrt(nd)) AS BIGINT))")
             .as("df_cap"))
-      // round 18 (PhashProbe, warm ×3 at sf0.1): full key ~2.3 s of which
-      // signature+checkpoint ~1.63 s and the band/census/verify half
-      // ~0.89 s. The signature floor is the pinned hash family itself
-      // (one portable md5 per byte-position shingle) plus one-time
-      // codegen of the 121-column aggregate — the bench's colder per-key
-      // number (~3.7 s) is dominated by that first-plan codegen, not by
-      // data work, so no further plan change moves it at fixture scale.
+      // round 18 (phash probe, source in 22e7484, warm ×3 at sf0.1): full
+      // key ~2.3 s of which signature+checkpoint ~1.63 s and the
+      // band/census/verify half ~0.89 s. The signature floor is the
+      // pinned hash family itself (one portable md5 per byte-position
+      // shingle) plus one-time codegen of the 121-column aggregate — the
+      // bench's colder per-key number (~3.7 s) is dominated by that
+      // first-plan codegen, not by data work, so no further plan change
+      // moves it at fixture scale.
       val ph = phashWords(hx, knobs).localCheckpoint(true)
       val bands = ph
         .select(col("doc_id"), explode(array(

@@ -270,10 +270,11 @@ object TextOps {
     // lazy cache: sh is consumed by THREE branches (df-count, candDocs
     // semi-join, docSets) that otherwise race to fill the cache inside
     // one action, each re-deriving the md5 shingle extraction.
-    // round 18 (CkptProbe, order-alternated ×4 at sf0.1): since round 17
-    // the input is the materialized hashed_shingles parquet artifact, so
-    // dropping this checkpoint (three direct artifact scans) was measured
-    // — flat within noise (medians 3.05 ckpt vs 3.26 scan, 2 wins each).
+    // round 18 (checkpoint probe, source in 22e7484, order-alternated ×4
+    // at sf0.1): since round 17 the input is the materialized
+    // hashed_shingles parquet artifact, so dropping this checkpoint (three
+    // direct artifact scans) was measured — flat within noise (medians
+    // 3.05 ckpt vs 3.26 scan, 2 wins each).
     // Kept: the copy costs nothing measurable here and keeps the build
     // robust to the artifact growing past the page-cache at larger SFs.
     val sh = hashedShingles(s, d).localCheckpoint(true)
@@ -778,8 +779,9 @@ object TextOps {
       // round-2 string cache, which cost more than recompute) is free.
       // Any ~1e-7 collision is shared by the oracle (same md5 family), so
       // the differential gate still holds.
-      // round 18 (NgramProbe, interleaved at sf0.1): two rewrites of this
-      // extraction/materialization A/B-measured SLOWER and were not landed:
+      // round 18 (ngram probe, source in e6eaca1, interleaved at sf0.1):
+      // two rewrites of this extraction/materialization A/B-measured
+      // SLOWER and were not landed:
       // (a) in-row array_distinct(transform(...)) before hashing — the
       //     interpreted HOF costs more than the ~30% duplicate md5 calls it
       //     saves (in-doc dup ratio is only 1.43×); build 0.65 → 0.7-1.4 s;
@@ -1415,7 +1417,8 @@ object TextOps {
       // token) was tried and is a NO-OP — Catalyst prunes tf's unused count
       // buffer, collapsing the rollup to the identical distinct-then-count
       // physical plan, and the fanout exchange under both corpus passes is
-      // already AQE-reused (TfidfProbe final plans: byte-identical trees).
+      // already AQE-reused (tf-idf probe final plans, source in f75470a:
+      // byte-identical trees).
       val df = tok.select("doc_id", "token").distinct()
         .groupBy("token").agg(count(lit(1)).as("df")).hint("merge")
       val n = documents(s, d).agg(count(lit(1)).as("n_docs"))

@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
 
-/** JDBC-backed metadata catalog — the relational twin of the JSON-file
-  * [[CatalogStore]], filling the role the reference assigns to a Postgres
+/** JDBC-backed metadata catalog of [[CatalogStore.Entry]] records,
+  * filling the role the reference assigns to a Postgres
   * 17 database with diesel migrations (/root/reference/docker-compose.yaml:2-19,
   * flake.nix:26): durable `name → (path, format, options)` dataset state
   * with schema migrations and transactional multi-client writes.
@@ -31,7 +31,7 @@ import scala.jdk.CollectionConverters._
   * deployment swaps the URL to Derby network server or Postgres and the
   * code is unchanged.
   *
-  * Scale note: like CatalogStore, this holds table LOCATIONS, never data —
+  * Scale note: this holds table LOCATIONS, never data —
   * O(registered datasets), independent of corpus volume.
   */
 object JdbcCatalog {
@@ -475,8 +475,8 @@ object JdbcCatalog {
   }
 
   /** Project every cataloged dataset into the session as a temp view —
-    * same restart contract as [[CatalogStore.registerAll]]: a brand-new
-    * SparkSession + a fresh connection reproduces the queryable catalog.
+    * the restart path: a brand-new SparkSession + a fresh connection
+    * reproduces the queryable catalog.
     */
   def registerAll(s: SparkSession, c: Connection): Unit =
     load(c).foreach { e =>

@@ -39,7 +39,7 @@ object TableRegistry {
     * karna-db role: the reference's Postgres catalog implies a surface
     * that REGISTERS datasets, not just queries them). Process-global on
     * purpose: registrations are catalog state (one catalog per serving
-    * process, durably backed by [[JdbcCatalog]]/[[CatalogStore]] at the
+    * process, durably backed by [[JdbcCatalog]] at the
     * HTTP layer), while per-request isolation stays where it already
     * lives — each request's private temp-view session. Names here join
     * the static fixture tables for resolution in ALL THREE dialects:

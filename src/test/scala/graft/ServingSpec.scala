@@ -313,30 +313,6 @@ class ServingSpec extends AnyFunSuite {
 
   // ---- persistent catalog ----------------------------------------------
 
-  test("CatalogStore registrations survive a brand-new session") {
-    val file = Files.createTempFile("graft_catalog", ".json")
-    Files.delete(file)
-    CatalogStore.register(file,
-      CatalogStore.Entry("my_orders", s"$d/orders.parquet", "parquet"))
-    CatalogStore.register(file,
-      CatalogStore.Entry("my_nation", s"$d/nation.parquet", "parquet",
-        Map("mergeSchema" -> "false")))
-    // replace wins, no duplicate
-    CatalogStore.register(file,
-      CatalogStore.Entry("my_orders", s"$d/orders.parquet", "parquet"))
-    assert(CatalogStore.load(file).map(_.name).sorted === Seq("my_nation", "my_orders"))
-
-    // the restart path: a NEW session (fresh temp-view catalog) + registerAll
-    val fresh = spark.newSession()
-    assert(!fresh.catalog.tableExists("my_orders"))
-    CatalogStore.registerAll(fresh, file)
-    assert(fresh.table("my_orders").count() === spark.read.parquet(s"$d/orders.parquet").count())
-
-    CatalogStore.unregister(file, "my_orders")
-    assert(CatalogStore.load(file).map(_.name) === Seq("my_nation"))
-    Files.delete(file)
-  }
-
   /** The engine-portable catalog exercise — migrations already ran in
     * connectUrl/connect; this drives concurrent serializable upserts
     * over OVERLAPPING names (no lost rows, no duplicate-key failures),
@@ -702,12 +678,14 @@ class ServingSpec extends AnyFunSuite {
     assert(back.columns.toSeq === src.columns.toSeq)
 
     // and the persistent catalog can point a dataset at the object store
-    val cat = Files.createTempFile("graft_catalog_s3", ".json")
-    CatalogStore.register(cat, CatalogStore.Entry("s3_orders", uri, "parquet"))
-    val fresh = spark.newSession()
-    CatalogStore.registerAll(fresh, cat)
-    assert(fresh.sql("SELECT count(*) AS n FROM s3_orders").collect()(0).getLong(0) === 100)
-    Files.delete(cat)
+    val catDb = Files.createTempDirectory("graft_catalog_s3").resolve("db").toString
+    val c = JdbcCatalog.connect(catDb)
+    try {
+      JdbcCatalog.register(c, CatalogStore.Entry("s3_orders", uri, "parquet"))
+      val fresh = spark.newSession()
+      JdbcCatalog.registerAll(fresh, c)
+      assert(fresh.sql("SELECT count(*) AS n FROM s3_orders").collect()(0).getLong(0) === 100)
+    } finally c.close()
   }
 
   // ---- per-request isolation + serving hardening ------------------------

@@ -2,21 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (UTC, small shuffle width). */
+/** One shared local session for all suites: `GraftSession`'s config on
+  * a fixed 4 cores, so test results do not vary by host.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val cores = 4
+  lazy val spark: SparkSession = GraftSession.local("graft-test", cores)
   val sfDir = "/root/testdata/sf0.001"
 
   /** A private copy of the fixture dir, for specs that rewrite its tables. */
