@@ -183,8 +183,8 @@ object Tables {
     if (files.length >= target) return df
     val conf = df.sparkSession.sessionState.newHadoopConf()
     val maxSplit = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-    val splits = files.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
+    val splits = files.map { f => // inputFiles are URIs: a `"` is `%22`
+      val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
       val len = p.getFileSystem(conf).getFileStatus(p).getLen
       math.max(1L, (len + maxSplit - 1) / maxSplit)
     }.sum

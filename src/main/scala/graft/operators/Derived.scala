@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Materialize-once seam for shared derived datasets (the
   * materialized-intermediate pattern a 100 TB pipeline runs as a matter of
@@ -14,9 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * times"). The prefix is deterministic (md5-derived hash family, no RNG),
   * so materializing it to parquet once per (sf dir) and scanning it is
   * plan-equivalent; the parquet round-trip of (a bigint, b bigint, band int)
-  * is exact. `graft.Bench` times the first derivation separately
-  * (`derived_s` in the bench JSON) so per-key numbers stay comparable and
-  * the derivation cost stays visible rather than landing on whichever
+  * is exact. Each build records its self time (`buildSeconds`):
+  * `graft.Bench` lets an artifact build on first use inside its consumer
+  * key, reports the build's self time under `derived_s` and takes it out
+  * of that key's time, so per-key numbers stay comparable and the
+  * derivation cost stays visible rather than landing on whichever
   * consumer happens to run first.
   *
   * The artifact lives under java.io.tmpdir, namespaced by PID (no
@@ -36,8 +39,13 @@ object Derived {
   // block on the future (never on a half-written file — the path is
   // published only after write() returns); a failed build removes its
   // future so the next caller retries instead of caching the failure.
+  // A completed cell holds (artifact path, build self seconds).
   private val paths = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.util.concurrent.CompletableFuture[String]]()
+    (String, String), java.util.concurrent.CompletableFuture[(String, Double)]]()
+
+  // wall nanos of the builds nested inside the current thread's build, so
+  // each build's self time excludes the artifacts it triggers
+  private val nestedNanos = new ThreadLocal[Long] { override def initialValue() = 0L }
 
   private lazy val root: java.io.File = {
     val dir = new java.io.File(sys.props("java.io.tmpdir"),
@@ -57,28 +65,41 @@ object Derived {
 
   def dataset(s: SparkSession, d: String, name: String)(build: => DataFrame): DataFrame = {
     val key = (new java.io.File(d).getCanonicalPath, name)
-    val fut = new java.util.concurrent.CompletableFuture[String]()
+    val fut = new java.util.concurrent.CompletableFuture[(String, Double)]()
     val prior = paths.putIfAbsent(key, fut)
     val cell = if (prior == null) {
+      val outerNested = nestedNanos.get
+      nestedNanos.set(0L)
+      val t0 = System.nanoTime()
       try {
         val dir = new java.io.File(root,
           s"$name-${java.lang.Integer.toHexString(key._1.hashCode)}")
         build.write.mode("overwrite").parquet(dir.getPath)
-        fut.complete(dir.getPath)
+        fut.complete((dir.getPath, (System.nanoTime() - t0 - nestedNanos.get) / 1e9))
       } catch {
         case t: Throwable =>
           fut.completeExceptionally(t)
           paths.remove(key, fut) // next caller rebuilds; waiters see t
           throw t
-      }
+      } finally nestedNanos.set(outerNested + System.nanoTime() - t0)
       fut
     } else prior
-    val p = try cell.join()
+    val p = try cell.join()._1
     catch { // unwrap so callers see the build's own exception
       case e: java.util.concurrent.CompletionException if e.getCause != null =>
         throw e.getCause
     }
     s.read.parquet(p)
+  }
+
+  /** Self seconds of every artifact built so far for dir `d`, by name: a
+    * build's wall time less the builds nested inside it.
+    */
+  def buildSeconds(d: String): Map[String, Double] = {
+    val dir = new java.io.File(d).getCanonicalPath
+    paths.asScala.iterator.collect {
+      case ((`dir`, name), f) if f.isDone && !f.isCompletedExceptionally => name -> f.join()._2
+    }.toMap
   }
 
   /** THE near-dup candidate artifact: capped band-join pairs

@@ -119,15 +119,15 @@ object GraphOps {
       // Fixed round count ⇒ the oracle is the same search textually
       // unrolled (the pagerank discipline); min() over level unions is
       // belt-and-braces (levels are disjoint by construction).
-      // round 18 (checkpoint probe, source in 22e7484, order-alternated ×4
-      // at sf0.1): two edge-prep variants measured and NOT landed —
-      // dropping this checkpoint (the 3 rounds re-scan the trade_edges
-      // artifact + re-explode) is flat (medians 2.35 vs 2.34), and the
-      // ccEdgeCache-style repartition(src).cache() is SLOWER (2.66): at 3
-      // rounds the saved per-round edge exchange does not pay for the
-      // columnar cache re-reads (the cc win needed ~8 rounds over a
-      // bigger edge set).
-      val edges = tradeEdges(s, d).localCheckpoint(true)
+      // The 3 rounds re-scan the edge list. Round 18 (checkpoint probe,
+      // source in 22e7484, order-alternated ×4 at sf0.1) measured two
+      // edge-prep variants against a localCheckpoint of the edges:
+      // dropping the checkpoint is flat (medians 2.35 vs 2.34 s), so it is
+      // gone, and the ccEdgeCache-style repartition(src).cache() is SLOWER
+      // (2.66): at 3 rounds the saved per-round edge exchange does not pay
+      // for the columnar cache re-reads (the cc win needed ~8 rounds over
+      // a bigger edge set).
+      val edges = tradeEdges(s, d)
       val srcs = customer(s, d)
         .filter(col("c_custkey") % 100 === 0)
         .select((col("c_custkey") * 2).as("node"))

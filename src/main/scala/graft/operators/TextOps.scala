@@ -500,6 +500,13 @@ object TextOps {
     labels
   }
 
+  /** Runs the whole minhash/shingle pipeline once on `d` — shingle
+    * explode, xxhash codegen, band self-join, label-propagation loop — so
+    * a benchmark can pay its one-time codegen untimed on a tiny fixture.
+    */
+  private[graft] def warmPipeline(s: SparkSession, d: String): Long =
+    queries("dedup_cluster")(s, d).count()
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_exact" -> ((s, d) =>
       documents(s, d)

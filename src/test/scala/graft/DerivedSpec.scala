@@ -73,6 +73,24 @@ class DerivedSpec extends AnyFunSuite {
     assert(fut.get(120, java.util.concurrent.TimeUnit.SECONDS) === 7L)
   }
 
+  test("buildSeconds reports self time: an outer build excludes the inner build it triggers") {
+    val n = System.nanoTime()
+    val t0 = System.nanoTime()
+    Derived.dataset(spark, d, s"outer-timed-$n") {
+      Derived.dataset(spark, d, s"inner-timed-$n") {
+        Thread.sleep(300)
+        spark.range(7).toDF("x")
+      }
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val secs = Derived.buildSeconds(d)
+    val (outer, inner) = (secs(s"outer-timed-$n"), secs(s"inner-timed-$n"))
+    assert(inner >= 0.3)
+    // outer self + inner self is the outer build's wall time, which the
+    // call's own wall time bounds; without the exclusion it would exceed it
+    assert(outer > 0 && outer + inner <= wall, s"outer=$outer inner=$inner wall=$wall")
+  }
+
   test("a failed build is not cached: waiters see the failure, the next caller rebuilds") {
     val name = s"fail-${System.nanoTime()}"
     val boom = intercept[RuntimeException] {
