@@ -61,7 +61,6 @@ object Bench {
       .withColumn("rn", row_number().over(Window.partitionBy(df("g")).orderBy("x")))
       .filter(col("rn") <= 2)
       .count()
-    graft.plans.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir).limit(16)
       .select(col("vec_id"), col("embedding"))
     e.as("a").crossJoin(broadcast(e.as("b")))

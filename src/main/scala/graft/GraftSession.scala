@@ -14,6 +14,12 @@ import org.apache.spark.sql.SparkSession
   *  - Spark UI off
   *  - RocksDB state store for every stateful query, so behaviour cannot
   *    depend on which key ran first (`stream_tws` requires RocksDB)
+  *  - `graft.plans.GraftExtensions`, so every session of the context,
+  *    request sessions included, resolves `vec_dot`, `bloom_filter_agg`
+  *    and `might_contain`
+  *  - the driver's `StateStoreCoordinator`, which a batch
+  *    `transformWithState` needs but Spark only opens with the context's
+  *    first `StreamingQueryManager`
   *  - log level WARN
   */
 object GraftSession {
@@ -39,7 +45,9 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
       .getOrCreate()
+    s.streams
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -250,9 +250,8 @@ object Aggregates {
       // (no false negatives, the query runs) but bits/key — and with it
       // the FP guarantee — degrades; at that scale you raise the confs
       // or shard the filter per partition. build/probe are Spark's own
-      // runtime-filter Catalyst expressions, surfaced as SQL by
-      // GraftFunctions.register.
-      graft.plans.GraftFunctions.register(s)
+      // runtime-filter Catalyst expressions, surfaced as SQL by the
+      // GraftExtensions every GraftSession installs.
       val ord = orders(s, d)
       ord.createOrReplaceTempView("orders")
       customer(s, d).createOrReplaceTempView("customer")

@@ -50,7 +50,6 @@ object VectorOps {
   private def rankKey(c: Column): Column = round(c, 6)
 
   private def emb(s: SparkSession, d: String) = {
-    graft.plans.GraftFunctions.register(s) // vec_dot available to every query
     // round 17: the validation gate below is materialized ONCE per sf dir
     // (Derived.validEmb) and every emb() occurrence scans the artifact —
     // keys like sim_ivf_pq inline emb eight times and previously re-paid

@@ -8,7 +8,7 @@ package org.apache.spark
   * racy (a slow flush still bleeds into the next key) and adds
   * 200 ms × keys of dead wall time. `LiveListenerBus.waitUntilEmpty` is
   * the deterministic drain Spark's own tests use; it is `private[spark]`,
-  * hence this one-method shim (same pattern as GraftStateStoreBootstrap).
+  * hence this one-method shim in Spark's package.
   */
 object GraftListenerDrain {
   /** Block until every queued listener event is delivered, or `timeoutMs`

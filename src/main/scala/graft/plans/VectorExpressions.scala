@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain,
+  Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.apache.spark.sql.SparkSessionExtensions
@@ -81,67 +83,43 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration surfaces for the custom expressions. */
+/** The SQL functions a graft session offers beyond Spark's own, each
+  * declared once as (name, doc, builder).
+  */
 object GraftFunctions {
 
-  private[plans] val vecDotBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotProduct(a, b)
-    case other =>
-      throw new IllegalArgumentException(s"vec_dot expects 2 args, got ${other.size}")
-  }
+  private def fn(name: String, cls: Class[_], usage: String)(
+      build: PartialFunction[Seq[Expression], Expression]) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (args: Seq[Expression]) => build.applyOrElse(args, (a: Seq[Expression]) =>
+        throw new IllegalArgumentException(s"$name expects $usage, got ${a.size} args")))
 
-  /** Spark ships Bloom-filter build/probe as INTERNAL Catalyst expressions
-    * (used by its own InjectRuntimeFilter rule) without SQL registration;
-    * exposing them makes the runtime-filter primitive a first-class user
-    * function (agg_bloom_filter). Arguments follow the internal contract:
-    * the build/probe child must be `xxhash64(key)`.
-    */
-  private[plans] val bloomAggBuilder: Seq[Expression] => Expression = {
-    case Seq(c, n, b) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n, b)
-    case other =>
-      throw new IllegalArgumentException(
-        s"bloom_filter_agg expects (xxhash64(col), nItems, nBits), got ${other.size} args")
-  }
-  private[plans] val mightContainBuilder: Seq[Expression] => Expression = {
-    case Seq(f, v) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(f, v)
-    case other =>
-      throw new IllegalArgumentException(s"might_contain expects 2 args, got ${other.size}")
-  }
+  private[plans] val all = Seq(
+    fn("vec_dot", classOf[DotProduct], "2 args") { case Seq(a, b) => DotProduct(a, b) },
+    // Spark ships Bloom-filter build/probe as INTERNAL Catalyst expressions
+    // (used by its own InjectRuntimeFilter rule) without SQL registration;
+    // exposing them makes the runtime-filter primitive a first-class user
+    // function (agg_bloom_filter). Arguments follow the internal contract:
+    // the build/probe child must be `xxhash64(key)`.
+    fn("bloom_filter_agg", classOf[BloomFilterAggregate], "(xxhash64(col), nItems, nBits)") {
+      case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
+    },
+    fn("might_contain", classOf[BloomFilterMightContain], "2 args") {
+      case Seq(f, v) => BloomFilterMightContain(f, v)
+    })
 
-  /** Session-level registration (idempotent) → usable as `expr("vec_dot(a,b)")`. */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", vecDotBuilder, "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg", bloomAggBuilder, "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain", mightContainBuilder, "built-in")
-  }
+  /** Registers the functions on a session built without [[GraftExtensions]]. */
+  def register(s: SparkSession): Unit =
+    all.foreach { case (id, info, builder) =>
+      s.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }
 
-/** `SparkSessionExtensions` hook — the library-user path:
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
+/** The session extensions every `graft.GraftSession` installs, so every
+  * session of its context, request sessions included, resolves
+  * [[GraftFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      GraftFunctions.vecDotBuilder))
-    e.injectFunction((
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      GraftFunctions.bloomAggBuilder))
-    e.injectFunction((
-      FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "might_contain"),
-      GraftFunctions.mightContainBuilder))
-    e.injectOptimizerRule(_ => DimBroadcastRule)
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach(e.injectFunction)
 }

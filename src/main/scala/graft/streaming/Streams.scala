@@ -219,11 +219,6 @@ object Streams {
 
   def runningUserStats(events: DataFrame): DataFrame = {
     val s = events.sparkSession
-    // transformWithState requires the RocksDB provider + a registered
-    // StateStoreCoordinator in batch mode — same bootstrap as userRunningMax
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    org.apache.spark.sql.GraftStateStoreBootstrap.ensureCoordinator()
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import s.implicits._
     // keyable, valued rows only: the (Long, Double) encoder is primitive
@@ -257,9 +252,6 @@ object Streams {
     */
   def runningUserStatsTtl(events: DataFrame, ttlMs: Option[Long]): DataFrame = {
     val s = events.sparkSession
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    org.apache.spark.sql.GraftStateStoreBootstrap.ensureCoordinator()
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig}
     import s.implicits._
     val ttl = ttlMs.map(ms => TTLConfig(java.time.Duration.ofMillis(ms)))
@@ -369,9 +361,6 @@ object Streams {
   def sessionizeStream(events: DataFrame, gapMs: Long,
                        delay: String = "10 seconds"): DataFrame = {
     val s = events.sparkSession
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    org.apache.spark.sql.GraftStateStoreBootstrap.ensureCoordinator()
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import s.implicits._
     events.filter(col("user_id").isNotNull && col("ts").isNotNull)
@@ -415,13 +404,8 @@ object Streams {
 
   def userRunningMax(events: DataFrame): DataFrame = {
     val s = events.sparkSession
-    // transformWithState requires the RocksDB state store provider (the
-    // default HDFS-backed store can't host the TWS column families), and in
-    // batch mode the StateStoreCoordinator endpoint must be registered
-    // up-front (streaming queries get it from StreamExecution)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    org.apache.spark.sql.GraftStateStoreBootstrap.ensureCoordinator()
+    // transformWithState needs the RocksDB state store and, in batch mode,
+    // the driver's StateStoreCoordinator: GraftSession opens both
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import s.implicits._
     // primitive-encoder NULL discipline — same contract as runningUserStats

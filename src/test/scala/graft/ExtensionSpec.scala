@@ -605,7 +605,6 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("bloom runtime-filter functions: members always hit, strangers mostly miss") {
-    graft.plans.GraftFunctions.register(spark)
     val row = Aggregates.queries("agg_bloom_filter")(spark, d).collect().head
     assert(row.getLong(1) === 0L, s"bloom produced false negatives: $row")
     assert(row.getBoolean(2), s"fp rate above bound: $row")
@@ -798,7 +797,6 @@ class ExtensionSpec extends AnyFunSuite {
     // partner with round(cos,6) >= 0.35 (independent machinery: SQL join)
     val e = Tables.embeddings(spark, d)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    graft.plans.GraftFunctions.register(spark)
     out.join(e, "vec_id").createOrReplaceTempView("sem")
     val mismatch = spark.sql(
       """SELECT s.vec_id FROM sem s
@@ -820,7 +818,6 @@ class ExtensionSpec extends AnyFunSuite {
     assert(out.filter($"rank" < 1 || $"rank" > 3).count() === 0)
     assert(out.filter(abs($"cos_sim") > 1.0001).count() === 0)
     // exact top-3 over the same candidate split (queries <10, corpus >=10)
-    graft.plans.GraftFunctions.register(spark)
     Tables.embeddings(spark, d)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .createOrReplaceTempView("rr_e")

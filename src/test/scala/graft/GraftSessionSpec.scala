@@ -24,16 +24,35 @@ class GraftSessionSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
   }
 
-  test("SparkSession.builder appears in src/main/scala only in GraftSession.scala") {
+  test("a fresh newSession() resolves the engine's own functions") {
+    val fresh = spark.newSession()
+    val row = fresh.sql(
+      """SELECT vec_dot(array(1d, 2d), array(3d, 4d)) AS d,
+                might_contain(
+                  (SELECT bloom_filter_agg(xxhash64(id), 10L, 1024L) FROM range(10)),
+                  xxhash64(3L)) AS hit""").head()
+    assert(row.getDouble(0) === 11.0)
+    assert(row.getBoolean(1))
+  }
+
+  private def sourcesContaining(needle: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
     val files = Files.walk(root)
-    val callers =
-      try files.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map(p => p.getFileName.toString).toSeq
-      finally files.close()
-    assert(callers === Seq("GraftSession.scala"))
+    try files.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains(needle))
+      .map(p => p.getFileName.toString).toSeq.sorted
+    finally files.close()
+  }
+
+  test("SparkSession.builder appears in src/main/scala only in GraftSession.scala") {
+    assert(sourcesContaining("SparkSession.builder") === Seq("GraftSession.scala"))
+  }
+
+  test("no other code sets the state store or the extensions, or registers functions") {
+    for (needle <- Seq("stateStore.providerClass", "spark.sql.extensions"))
+      assert(sourcesContaining(needle) === Seq("GraftSession.scala"), needle)
+    assert(sourcesContaining("GraftFunctions.register(").isEmpty)
   }
 }

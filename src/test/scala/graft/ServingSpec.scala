@@ -137,6 +137,15 @@ class ServingSpec extends AnyFunSuite {
     assert(badSql.has("error"))
   }
 
+  test("a served SQL read calls the engine's own functions in its request session") {
+    // request sessions are newSession()s, which see the functions only
+    // because GraftSession installs them as a session extension
+    val resp = mapper.readTree(Server.handleJson(spark,
+      s"""{"dialect":"sql","query":"SELECT vec_dot(array(1d, 2d), array(3d, 4d)) AS d","dir":"$d"}"""))
+    assert(!resp.has("error"), resp.toString)
+    assert(resp.get("rows").get(0).get("d").asDouble === 11.0)
+  }
+
   test("handleJson drops the request session's temp views once the response is rendered") {
     // AQE pool threads keep a request's session alive after it returns, so
     // its views (one relation per table) must not outlive the response
