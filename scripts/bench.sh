@@ -8,7 +8,7 @@
 # numbers are weather, not plan cost. Both JSON lines are printed either
 # way; the LAST line is the one to record.
 #
-# Usage: scripts/bench.sh            (env: SPARK_GRAFT_SF_DIR etc. as run.sh)
+# Usage: scripts/bench.sh [sf_dir]   (else SPARK_GRAFT_SF_DIR; env as run.sh)
 # Env:   GRAFT_CANARY_MAX  quiet-band upper bound in seconds (default 3.5;
 #                          quiet readings on this host are ~1.4-2.0 s)
 #        GRAFT_RETRY_SLEEP cool-down before the retry (default 60 s)
@@ -17,7 +17,7 @@ cd "$(dirname "$0")/.."
 MAX="${GRAFT_CANARY_MAX:-3.5}"
 SLEEP="${GRAFT_RETRY_SLEEP:-60}"
 
-run_once() { scripts/run.sh graft.Bench; }
+run_once() { scripts/run.sh graft.Bench "$@"; }
 
 quiet() { # quiet <captured-stdout> → exit 0 iff both canaries within band
   # parse only the LAST stdout line: stray JVM/Spark stdout noise above
@@ -34,12 +34,12 @@ sys.exit(0 if ok else 1)
 EOF
 }
 
-OUT="$(run_once)"
+OUT="$(run_once "$@")"
 echo "$OUT"
 if ! quiet "$OUT"; then
   echo "bench.sh: canary outside quiet band (>${MAX}s) — host weather suspected; retrying once in ${SLEEP}s" >&2
   sleep "$SLEEP"
-  OUT="$(run_once)"
+  OUT="$(run_once "$@")"
   echo "$OUT"
   if ! quiet "$OUT"; then
     echo "bench.sh: retry also weather-contaminated; treat numbers as an upper bound only" >&2

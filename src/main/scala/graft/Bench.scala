@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver contract): times every `SparkEntry.queries` key at
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line.
+  * the fixture dir given as its argument (else `SPARK_GRAFT_SF_DIR`) and
+  * prints ONE JSON line.
   *
   * A single UNTIMED warm-up query runs before the timed loop: first use of
   * whole-stage codegen (Janino), ObjectHashAggregate, window exec, broadcast
@@ -113,8 +114,18 @@ object Bench {
     spark.catalog.clearCache()
   }
 
+  /** `graft.Bench [sf_dir]`: the fixture dir is the first argument, as for
+    * `graft.Verify`, else `SPARK_GRAFT_SF_DIR`, else `/root/testdata/sf0.1`.
+    */
+  private[graft] def sfDirOf(args: Seq[String], env: Map[String, String]): String = {
+    require(args.length <= 1,
+      s"usage: graft.Bench [sf_dir] (got ${args.length} arguments: ${args.mkString(" ")}); " +
+        "select keys with SPARK_GRAFT_KEYS")
+    args.headOption.getOrElse(env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sfDirOf(args.toSeq, sys.env)
     val spark = GraftSession("graft-bench")
     // optional comma-separated key subset for targeted profiling
     val only = sys.env.get("SPARK_GRAFT_KEYS")

@@ -115,9 +115,21 @@ object Tables {
     }
   }
 
+  /** Infer (path, format, options)'s schema unless the cached one matches
+    * the file's current stamp: one stat when nothing changed. Throws as
+    * [[read]] does when the path cannot be read.
+    */
+  private[graft] def refreshSchema(s: SparkSession, path: String, format: String,
+                                   options: Map[String, String]): Unit = {
+    val cached = Option(schemas.get(SlotKey(path, format, options)))
+    if (!stamp(s, path).exists(st => cached.exists(_.stamp == st)))
+      read(s, path, format, options)
+  }
+
   /** The schema last inferred for (path, format, options), without
     * checking the file — for translate-time column resolution, which has
-    * no session. Every request that reads the file refreshes it first.
+    * no session. `DatasetRegistry.warmSchemas` refreshes it before every
+    * NL translation.
     */
   private[graft] def cachedSchema(path: String, format: String,
                                   options: Map[String, String]): Option[StructType] =

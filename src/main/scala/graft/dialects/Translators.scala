@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LogicalPlan, UnresolvedWith}
 
-import graft.sources.TableRegistry
+import graft.sources.{DatasetRegistry, TableRegistry}
 
 /** The NL translation seam (SURVEY.md §2.9): the reference declares
   * "Natural Language" as a first-class dialect (reference README.md:2);
@@ -72,8 +72,12 @@ object NlGate {
   /** Throws IllegalArgumentException unless `sql` is a single read-only
     * query over registered catalog tables. Parsing uses Spark's own
     * parser, so "valid" means exactly what the engine will accept.
+    * Returns the catalog tables the query names: the only views its
+    * session needs. A name a CTE also defines stays in: the walk does not
+    * track scopes, and `WITH orders AS (SELECT * FROM orders …)` reads the
+    * table inside its own definition.
     */
-  def validate(s: SparkSession, sql: String): Unit = {
+  def validate(s: SparkSession, sql: String): Set[String] = {
     val plan =
       try s.sessionState.sqlParser.parsePlan(sql)
       catch {
@@ -126,19 +130,24 @@ object NlGate {
     // allNames, not tables.keySet: dynamically registered datasets
     // (POST /datasets → TableRegistry.registerDynamic) are first-class
     // catalog tables for the gate too
-    val unknown = referenced.toSet -- TableRegistry.allNames -- defined
+    val catalog = TableRegistry.allNames
+    val unknown = referenced.toSet -- catalog -- defined
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
         s"NL translation references unknown table(s): ${unknown.mkString(", ")}")
+    referenced.toSet intersect catalog
   }
 
   /** Translate → validate → execute: the one path every NL request takes
-    * regardless of which translator produced the SQL.
+    * regardless of which translator produced the SQL. The translator reads
+    * registered datasets' schemas from the schema cache, so those are
+    * brought up to date with their files first; only the tables the
+    * validated SQL names become views.
     */
   def run(s: SparkSession, dir: String, tr: NlTranslator, question: String): DataFrame = {
-    TableRegistry.registerAll(s, dir)
+    DatasetRegistry.warmSchemas(s)
     val sql = tr.translate(question)
-    validate(s, sql)
+    TableRegistry.register(s, dir, validate(s, sql))
     s.sql(sql)
   }
 }

@@ -84,17 +84,20 @@ object DatasetRegistry {
     }
   }
 
-  /** Warm the schema cache for every replayed registration (round-15
-    * ADVICE: after a restart, NL column-level questions over a replayed
-    * dataset rejected until an unrelated SQL/GraphQL request happened to
-    * load it — the same question's outcome depended on request history).
-    * Bad paths are skipped with a warning, the registerAll discipline:
+  /** Bring every registration's cached schema up to date with its file:
+    * one stat when nothing changed, an inference when the schema is
+    * missing or the file was rewritten (round-15 ADVICE: after a restart,
+    * NL column-level questions over a replayed dataset rejected until an
+    * unrelated SQL/GraphQL request happened to load it — the same
+    * question's outcome depended on request history). Runs on attach and
+    * before every NL translation, which reads these schemas.
+    * Bad paths are skipped with a warning, the `register` discipline:
     * a broken entry must not block startup, and regColumn's miss text
     * tells the user its schema is unloaded.
     */
   def warmSchemas(s: SparkSession): Unit =
     TableRegistry.dynamicEntries.foreach { e =>
-      try { TableRegistry.loadEntry(s, e); () }
+      try graft.Tables.refreshSchema(s, e.path, e.format, e.options)
       catch {
         case scala.util.control.NonFatal(t) => System.err.println(
           s"[graft] WARN: schema warm skipped for dataset '${e.name}' at " +

@@ -43,7 +43,7 @@ object TableRegistry {
     * HTTP layer), while per-request isolation stays where it already
     * lives — each request's private temp-view session. Names here join
     * the static fixture tables for resolution in ALL THREE dialects:
-    * `load` (GraphQL), `registerAll` (SQL temp views), and `allNames`
+    * `load` (GraphQL), `register` (SQL temp views), and `allNames`
     * (the NlGate allowlist + GraphQL introspection).
     *
     * Scale note: O(registered datasets) names — locations only, no data.
@@ -164,24 +164,33 @@ object TableRegistry {
 
   /** Register every table as a temp view (idempotent) — static fixtures
     * against `dir`, plus every dynamic dataset at its own registered
-    * location. A dynamic dataset whose path has gone bad since
-    * registration (deleted/moved file) is SKIPPED with a stderr warning
-    * instead of failing the whole call (round-14 ADVICE: one broken entry
-    * previously broke every SQL request server-wide): queries that
-    * reference the broken name fail with table-not-found; every other
-    * query is unaffected.
+    * location. For callers that need the whole catalog; a served query
+    * registers only the tables it names ([[register]]).
     */
-  def registerAll(s: SparkSession, dir: String): Unit = {
-    tables.foreach { case (name, fn) => fn(s, dir).createOrReplaceTempView(name) }
-    dynamicEntries.foreach { e =>
-      try loadEntry(s, e).createOrReplaceTempView(e.name)
-      catch { case scala.util.control.NonFatal(t) =>
-        System.err.println(s"[registry] dataset '${e.name}' is not loadable " +
-          s"at ${e.path} (${t.getMessage}); skipping its view — unregister " +
-          "or re-register it to clear this")
+  def registerAll(s: SparkSession, dir: String): Unit = register(s, dir, allNames)
+
+  /** Register the named tables as temp views (idempotent); a name that is
+    * no longer registered is left for the query to fail on. A dynamic
+    * dataset whose path has gone bad since registration (deleted/moved
+    * file) is SKIPPED with a stderr warning instead of failing the call
+    * (round-14 ADVICE: one broken entry previously broke every SQL request
+    * server-wide): queries that reference the broken name fail with
+    * table-not-found; every other query is unaffected.
+    */
+  def register(s: SparkSession, dir: String, names: Iterable[String]): Unit =
+    names.map(_.toLowerCase).foreach { name =>
+      tables.get(name) match {
+        case Some(fn) => fn(s, dir).createOrReplaceTempView(name)
+        case None => Option(dynamic.get(name)).foreach { e =>
+          try loadEntry(s, e).createOrReplaceTempView(e.name)
+          catch { case scala.util.control.NonFatal(t) =>
+            System.err.println(s"[registry] dataset '${e.name}' is not loadable " +
+              s"at ${e.path} (${t.getMessage}); skipping its view — unregister " +
+              "or re-register it to clear this")
+          }
+        }
       }
     }
-  }
 
   /** Foreign-key graph for dialect translators: (table, relation field) →
     * (target table, local key, target key).

@@ -34,4 +34,13 @@ class BenchSpec extends AnyFunSuite {
       """{"log": "\"queries\": {\"decoy\": 9.0}", "queries": {"a": 1.5, "b": 2}}""")
     assert(Bench.readPrior(f.toString) === Map("a" -> 1.5, "b" -> 2.0))
   }
+
+  test("the fixture dir is the only argument, else SPARK_GRAFT_SF_DIR; extra arguments are refused") {
+    val env = Map("SPARK_GRAFT_SF_DIR" -> "/from/env")
+    assert(Bench.sfDirOf(Seq("/from/arg"), env) === "/from/arg")
+    assert(Bench.sfDirOf(Nil, env) === "/from/env")
+    assert(Bench.sfDirOf(Nil, Map.empty) === "/root/testdata/sf0.1")
+    val e = intercept[IllegalArgumentException](Bench.sfDirOf(Seq("/a", "k1"), env))
+    assert(e.getMessage.contains("usage: graft.Bench [sf_dir]"), e.getMessage)
+  }
 }

@@ -35,6 +35,9 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(row.getBoolean(1))
   }
 
+  /** The files under `src/main/scala` that contain `needle`, as paths
+    * relative to it (`graft/GraftSession.scala`).
+    */
   private def sourcesContaining(needle: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
@@ -42,17 +45,23 @@ class GraftSessionSpec extends AnyFunSuite {
     try files.iterator.asScala
       .filter(p => p.toString.endsWith(".scala"))
       .filter(p => Files.readString(p).contains(needle))
-      .map(p => p.getFileName.toString).toSeq.sorted
+      .map(p => root.relativize(p).toString).toSeq.sorted
     finally files.close()
   }
 
   test("SparkSession.builder appears in src/main/scala only in GraftSession.scala") {
-    assert(sourcesContaining("SparkSession.builder") === Seq("GraftSession.scala"))
+    assert(sourcesContaining("SparkSession.builder") === Seq("graft/GraftSession.scala"))
   }
 
   test("no other code sets the state store or the extensions, or registers functions") {
     for (needle <- Seq("stateStore.providerClass", "spark.sql.extensions"))
-      assert(sourcesContaining(needle) === Seq("GraftSession.scala"), needle)
+      assert(sourcesContaining(needle) === Seq("graft/GraftSession.scala"), needle)
     assert(sourcesContaining("GraftFunctions.register(").isEmpty)
+  }
+
+  test("served reads render inside their plan and register only the tables they name") {
+    assert(sourcesContaining("toJSON").isEmpty)
+    assert(sourcesContaining("registerAll(")
+      .filter(p => p.startsWith("graft/server/") || p.startsWith("graft/dialects/")).isEmpty)
   }
 }

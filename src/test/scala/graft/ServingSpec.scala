@@ -94,6 +94,37 @@ class ServingSpec extends AnyFunSuite {
     assert(resp.get("rows").get(0).get("o_orderkey").asLong === firstKey)
   }
 
+  test("handleJson renders pre-cutover dates and day intervals as the engine holds them") {
+    val raw = Server.handleJson(spark,
+      s"""{"dialect":"sql","query":"SELECT DATE '1582-10-10' AS d, INTERVAL '3' DAY AS i","dir":"$d"}""")
+    val row = mapper.readTree(raw).get("rows").get(0)
+    assert(row.get("d").asText === "1582-10-10", raw)
+    assert(row.get("i").asText === "INTERVAL '3' DAY", raw)
+  }
+
+  test("served rows render byte for byte as Dataset.toJSON renders them") {
+    def same(what: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val mine = Server.jsonRows(df, Server.HardMaxRows)
+      assert(mine.nonEmpty, what)
+      assert(mine.toSeq === df.limit(Server.HardMaxRows).toJSON.collect().toSeq, what)
+    }
+    TableRegistry.tables.foreach { case (name, load) => same(name, load(spark, d)) }
+    same("nested graphql", graft.dialects.GraphQL.run(spark, d, Dialects.gqlNestedQuery))
+    same("nested graphql agg", graft.dialects.GraphQL.run(spark, d, Dialects.gqlNestedAggQuery))
+    same("edge values", spark.sql(
+      """SELECT 1 AS a, 'two' AS a,
+                double('NaN') AS nan, 0.0D AS pz, -0.0D AS nz, double('-Infinity') AS ninf,
+                X'00FF10' AS bin, map('k', 1, 'j', CAST(NULL AS INT)) AS m, map(2, 'x') AS mi,
+                named_struct('x', CAST(NULL AS STRING), 'y', 1) AS st,
+                CAST(NULL AS STRUCT<x: INT>) AS nst, array(1.5D, NULL) AS arr,
+                TIMESTAMP '2024-03-01 12:34:56.789012' AS ts,
+                TIMESTAMP_NTZ '2024-03-01 12:34:56' AS ntz, DATE '2024-02-29' AS dt,
+                CAST(12.345 AS DECIMAL(10, 3)) AS dec, 'q"uote\\tab é' AS str
+         UNION ALL
+         SELECT NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
+                NULL, NULL, NULL, NULL, NULL"""))
+  }
+
   test("handleJson explain mode returns the physical plan without executing") {
     val resp = mapper.readTree(Server.handleJson(spark,
       s"""{"dialect":"sql","query":"SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag","dir":"$d","explain":true}"""))
