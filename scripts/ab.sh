@@ -10,9 +10,12 @@
 #   -t SECONDS  --seconds for each run (default 15)
 #   workload    serve and/or batch_keys (default: both)
 #
-# The base is exported with `git archive` to target/ab/base-<sha>/ (target/
-# is ignored), so its karnabench builds and generates fixtures in its own
-# checkout. Each run's last two output lines go to target/ab/runs/. The
+# Both sides run from an export, so they differ only in code: the base is
+# exported with `git archive` to target/ab/base-<sha>/ (target/ is ignored),
+# and the working tree, with its modified and untracked-not-ignored files,
+# to target/ab/change/. Each side's karnabench builds and generates fixtures
+# in its own export; the change export keeps its karnabench/work/ from the
+# previous call. Each run's last two output lines go to target/ab/runs/. The
 # summary prints, for every gated metric in BENCHMARK.json, each side's
 # median and quartiles and how many pairs the change won, then the same
 # figures for the scalar metrics on the detail line. Nothing under
@@ -36,13 +39,22 @@ fi
 sha="$(git rev-parse --short "$base")"
 out="target/ab"
 base_dir="$out/base-$sha"
+change_dir="$out/change"
 runs="$out/runs"
 mkdir -p "$runs"
 if [ ! -d "$base_dir" ]; then
-  mkdir -p "$base_dir.tmp"
+  rm -rf "$base_dir.tmp"; mkdir -p "$base_dir.tmp"
   git archive "$sha" | tar -x -C "$base_dir.tmp"
   mv "$base_dir.tmp" "$base_dir"
 fi
+rm -rf "$change_dir.tmp"; mkdir -p "$change_dir.tmp"
+git ls-files -z --cached --others --exclude-standard |
+  while IFS= read -r -d '' f; do if [ -f "$f" ]; then printf '%s\0' "$f"; fi; done |
+  tar -c --null -T - | tar -x -C "$change_dir.tmp"
+if [ -d "$change_dir/karnabench/work" ]; then
+  mv "$change_dir/karnabench/work" "$change_dir.tmp/karnabench/work"
+fi
+rm -rf "$change_dir"; mv "$change_dir.tmp" "$change_dir"
 
 run_side() {  # side dir workload seed
   local side="$1" dir="$2" w="$3" s="$4"
@@ -55,9 +67,9 @@ for w in "${workloads[@]}"; do
   for ((i = 0; i < n; i++)); do
     s=$((seed0 + i))
     if ((i % 2 == 0)); then
-      run_side base "$base_dir" "$w" "$s"; run_side change . "$w" "$s"
+      run_side base "$base_dir" "$w" "$s"; run_side change "$change_dir" "$w" "$s"
     else
-      run_side change . "$w" "$s"; run_side base "$base_dir" "$w" "$s"
+      run_side change "$change_dir" "$w" "$s"; run_side base "$base_dir" "$w" "$s"
     fi
   done
 done
@@ -80,7 +92,7 @@ for w in workloads:
     pairs = [(load(w, "base", s), load(w, "change", s)) for s in seeds]
     bad = [(s, side) for s, p in zip(seeds, pairs) for side, (_, r) in zip(("base", "change"), p)
            if not r["correct"] or r["failed"]]
-    print(f"{w}: {n} pairs, base {sha} vs working tree; median [q1, q3]")
+    print(f"{w}: {n} pairs, base {sha} vs working tree, both exported; median [q1, q3]")
     print(f"  runs not correct or with failures: {bad or 'none'}")
     print(f"  {'metric':22s} {'base':>30s} {'change':>30s}  change won")
     for m, better in gated.items():

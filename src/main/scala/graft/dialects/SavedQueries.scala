@@ -1,10 +1,8 @@
 package graft.dialects
 
-import java.sql.Connection
-
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.JdbcCatalog
+import graft.sources.{CatalogStore, JdbcCatalog}
 
 /** The ONE saved-query write path (round 15, verdict item 1 — the last
   * unbuilt object the reference's karna-db crate implies: its Postgres
@@ -15,7 +13,8 @@ import graft.sources.JdbcCatalog
   * Every surface — POST /queries (REST), the `saveQuery` GraphQL
   * mutation, programmatic callers — routes through [[save]], so the
   * in-process registry and the durable catalog ([[JdbcCatalog]]'s
-  * `saved_queries` table, when one is attached) can never disagree, and
+  * `saved_queries` table, while [[CatalogStore]] has one attached) can
+  * never disagree, and
   * every saved text passes the SAME dialect gate exactly once at save
   * time:
   *
@@ -48,58 +47,19 @@ object SavedQueries {
     */
   private val ValidName = "[A-Za-z_][A-Za-z0-9_]*".r
 
-  @volatile private var durable: Option[Connection] = None
-  @volatile private var lastSeenSeq: Long = -1L
-
   private val process =
     new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
-  /** Attach the durable catalog and replay its rows — a restarted server
-    * lists and runs every previously saved query before its first
-    * request (the same restart contract as DatasetRegistry.attach).
+  /** Replace the process map with the durable rows (called by
+    * [[CatalogStore]] under its lock, on attach and when the stamp moved),
+    * so a replica lists/runs a peer's saves and stops serving a peer's
+    * deletes. Saved texts passed the save-time dialect gate on the WRITING
+    * replica; run-time re-validation here comes free via Server.handle,
+    * same as for locally saved queries.
     */
-  def attach(c: Connection): Unit = synchronized {
-    durable = Some(c)
-    JdbcCatalog.loadQueries(c).foreach(q =>
-      process.put(q.name, Entry(q.name, q.dialect, q.text)))
-    lastSeenSeq = JdbcCatalog.readSeq(c)
-  }
-
-  /** Cross-process coherence (round 17 — same stamp-compare-reload
-    * contract as DatasetRegistry.syncIfStale): when the catalog's global
-    * write stamp moved, replace the process map with the durable rows, so
-    * a replica lists/runs a peer's saves (and stops serving a peer's
-    * deletes) on the next request rather than at restart. Saved texts
-    * passed the save-time dialect gate on the WRITING replica; run-time
-    * re-validation on this one comes free via Server.handle, same as for
-    * locally saved queries.
-    */
-  def syncIfStale(): Unit = {
-    val c0 = durable
-    if (c0.isEmpty || JdbcCatalog.readSeq(c0.get) == lastSeenSeq) return
-    synchronized {
-      durable.foreach { c =>
-        val seq = JdbcCatalog.readSeq(c)
-        if (seq != lastSeenSeq) {
-          val rows = JdbcCatalog.loadQueries(c)
-          process.clear()
-          rows.foreach(q => process.put(q.name, Entry(q.name, q.dialect, q.text)))
-          lastSeenSeq = seq
-        }
-      }
-    }
-  }
-
-  /** Detach (tests / shutdown). Process entries remain until deleted —
-    * detaching must not yank queries out from under in-flight runs.
-    */
-  def detach(): Unit = synchronized { durable = None }
-
-  /** The serving layer's write guard: saves on a catalog-less server are
-    * rejected loudly at every surface rather than silently creating
-    * process-lifetime-only state.
-    */
-  def isDurable: Boolean = durable.nonEmpty
+  private[graft] def reload(rows: Seq[JdbcCatalog.SavedQuery]): Unit =
+    CatalogStore.reconcile(process,
+      rows.map(q => q.name -> Entry(q.name, q.dialect, q.text)).toMap)
 
   /** The save-time dialect gate — validation BEFORE any store is touched,
     * so a rejected save leaves no side effect behind.
@@ -118,25 +78,30 @@ object SavedQueries {
       s"unknown dialect: '$other' (expected ${AllowedDialects.toSeq.sorted.mkString(" | ")})")
   }
 
-  /** Save through the one shared write path. Rollback discipline mirrors
+  /** Save through the one shared write path. The dialect gate runs first,
+    * outside the catalog lock. Rollback discipline mirrors
     * DatasetRegistry.register: if the durable write fails, the process
     * entry is removed — the two stores must never diverge (an
     * in-memory-only save would run until restart, then silently vanish).
     */
-  def save(s: SparkSession, e0: Entry): Entry = synchronized {
+  def save(s: SparkSession, e0: Entry): Entry = {
     val e = e0.copy(name = e0.name.toLowerCase, dialect = e0.dialect.toLowerCase)
     require(ValidName.matches(e.name),
       s"saved-query name must match ${ValidName.regex}: '${e.name}'")
     require(AllowedDialects(e.dialect),
       s"unknown dialect: '${e0.dialect}' (expected ${AllowedDialects.toSeq.sorted.mkString(" | ")})")
     require(e.text.trim.nonEmpty, "saved-query text must be non-empty")
-    require(!process.containsKey(e.name),
-      s"saved query '${e.name}' already exists (DELETE it first to replace)")
+    def taken = s"saved query '${e.name}' already exists (DELETE it first to replace)"
+    require(!process.containsKey(e.name), taken)
     validateText(s, e)
-    process.put(e.name, e)
-    try durable.foreach(JdbcCatalog.saveQuery(_,
-      JdbcCatalog.SavedQuery(e.name, e.dialect, e.text)))
-    catch { case t: Throwable => process.remove(e.name); throw t }
+    CatalogStore.write { durable =>
+      // again under the lock: a concurrent save may have taken the name
+      // while the gate ran
+      require(process.putIfAbsent(e.name, e) == null, taken)
+      try durable.foreach(JdbcCatalog.saveQuery(_,
+        JdbcCatalog.SavedQuery(e.name, e.dialect, e.text)))
+      catch { case t: Throwable => process.remove(e.name); throw t }
+    }
     e
   }
 
@@ -146,10 +111,10 @@ object SavedQueries {
     * Returns true if EITHER store held the row — a durable row the process
     * map lacks (a peer process sharing the catalog wrote it; DEPLOY.md §5)
     * is still a real delete, not a 404. Live peers observe the delete at
-    * their next serving read via [[syncIfStale]] (the catalog_seq stamp
-    * this write moved).
+    * their next serving read via [[CatalogStore.syncIfStale]] (the
+    * catalog_seq stamp this write moved).
     */
-  def delete(name: String): Boolean = synchronized {
+  def delete(name: String): Boolean = CatalogStore.write { durable =>
     val n = name.toLowerCase
     val inDurable = durable.exists(JdbcCatalog.deleteQuery(_, n))
     process.remove(n) != null || inDurable

@@ -3,7 +3,7 @@ package graft.server
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -78,11 +78,11 @@ object Server {
     * `newSession()` of `s`), so the caller can release its views.
     */
   private def handleIn(s: SparkSession, sess: SparkSession, req: ServeRequest): DataFrame = {
-    // cross-process coherence (round 17): observe peer replicas' dataset
-    // registrations/unregistrations before resolving this request's
-    // tables — one single-row stamp SELECT when nothing changed, a no-op
-    // without an attached catalog
-    DatasetRegistry.syncIfStale(Some(s))
+    // cross-process coherence (round 17): observe peer replicas' metadata
+    // writes before resolving this request's tables — one single-row
+    // stamp SELECT when nothing changed, a no-op without an attached
+    // catalog
+    CatalogStore.syncIfStale(Some(s))
     req.dialect.toLowerCase match {
       case "sql" =>
         TableRegistry.register(sess, req.dir, graft.dialects.NlGate.validate(sess, req.query))
@@ -95,20 +95,11 @@ object Server {
         // write-path durability guard (round-14 ADVICE): a mutation on a
         // catalog-less serving process would silently create process-
         // lifetime-only state — the exact state the REST write routes
-        // reject loudly. Checked against the registry the mutation
-        // actually targets (round 15: saved-query mutations guard on
-        // SavedQueries' attachment, dataset mutations on
-        // DatasetRegistry's), so a partially attached process can never
-        // accept a write its durable store won't hold.
-        GraphQL.mutationRoot(req.query).foreach { root =>
-          val durable =
-            if (root == "saveQuery" || root == "deleteQuery")
-              graft.dialects.SavedQueries.isDurable
-            else DatasetRegistry.isDurable
-          require(durable,
+        // reject loudly, on the same CatalogStore.isDurable guard
+        if (GraphQL.mutationRoot(req.query).nonEmpty)
+          require(CatalogStore.isDurable,
             "no catalog configured (start the server with a catalog " +
               "directory to apply mutations)")
-        }
         GraphQL.run(sess, req.dir, req.query)
       case "nl"      => NlToSql.run(sess, req.dir, req.query)
       case other =>
@@ -261,11 +252,6 @@ object Server {
     var failed = false
     try {
       val node = mapper.readTree(body)
-      def req(f: String): String = {
-        val v = node.get(f)
-        require(v != null && v.isTextual, s"missing string field '$f'")
-        v.asText
-      }
       // meter attribution FIRST: a request whose dialect parses but whose
       // maxRows/params fail validation must meter under ITS dialect, not
       // "invalid" (review round 16)
@@ -300,10 +286,11 @@ object Server {
       // the whole translate+execute path runs under the request's job
       // group so the watchdog can cancel a runaway execution; explain
       // stays planning-only (no job ever starts under it)
-      val dialect = req("dialect")
+      val dialect = stringField(node, "dialect")
       try withJobTimeout(s, s"$dialect /query") {
         val df = handleIn(s, sess,
-          ServeRequest(dialect, req("query"), req("dir"), maxRows, params))
+          ServeRequest(dialect, stringField(node, "query"), stringField(node, "dir"),
+            maxRows, params))
         // {"explain": true} returns the formatted physical plan INSTEAD of
         // rows — the console's plan-inspection mode. Planning only: the
         // query is analyzed and optimized but no job runs, so explain on an
@@ -321,8 +308,7 @@ object Server {
     } catch {
       case e: Throwable =>
         failed = true
-        val err = mapper.createObjectNode()
-        err.put("error", Option(e.getMessage).getOrElse(e.getClass.getName))
+        val err = errorNode(e)
         // structured disambiguation (round 17, verdict item 5): an
         // ambiguous NL dimension carries its term + resolving qualifier
         // phrases as data — surface them so the console can render
@@ -340,6 +326,37 @@ object Server {
       Metrics.record(meterDialect, (System.nanoTime() - t0) / 1000000L, failed)
     }
   }
+
+  /** The string field `f` of a request body, or a 400-mapped failure. */
+  private def stringField(node: JsonNode, f: String): String = {
+    val v = node.get(f)
+    require(v != null && v.isTextual, s"missing string field '$f'")
+    v.asText
+  }
+
+  private def errorNode(e: Throwable): ObjectNode = {
+    val err = mapper.createObjectNode()
+    err.put("error", Option(e.getMessage).getOrElse(e.getClass.getName))
+    err
+  }
+
+  /** (HTTP status, JSON body) of one metadata route: 200 with `body`'s
+    * JSON, else 404 for an unknown name (`NoSuchElementException`), 405
+    * for an unsupported method (`UnsupportedOperationException`) and 400
+    * for every other failure, validation included. The no-catalog 503 is
+    * mapped at the HTTP layer.
+    */
+  private def statusJson(body: => String): (Int, String) =
+    try (200, body)
+    catch {
+      case e: Throwable =>
+        val code = e match {
+          case _: NoSuchElementException => 404
+          case _: UnsupportedOperationException => 405
+          case _ => 400
+        }
+        (code, mapper.writeValueAsString(errorNode(e)))
+    }
 
   /** Driver-safe JSON rendering: fetch maxRows+1 to detect truncation,
     * each row serialized by `to_json` inside the query's own plan (types
@@ -389,9 +406,9 @@ object Server {
     * schema-only read before any store writes.
     */
   def handleDatasets(method: String, name: Option[String], body: String,
-                     validateWith: Option[SparkSession] = None): (Int, String) = {
-    try {
-      DatasetRegistry.syncIfStale(validateWith) // list/delete see peer writes
+                     validateWith: Option[SparkSession] = None): (Int, String) =
+    statusJson {
+      CatalogStore.syncIfStale(validateWith) // list/delete see peer writes
       method match {
         case "GET" =>
           val out = mapper.createObjectNode()
@@ -402,17 +419,12 @@ object Server {
             val o = n.putObject("options")
             e.options.foreach { case (k, v) => o.put(k, v) }
           }
-          (200, mapper.writeValueAsString(out))
+          mapper.writeValueAsString(out)
         case "POST" =>
           val node = mapper.readTree(body)
-          def req(f: String): String = {
-            val v = node.get(f)
-            require(v != null && v.isTextual, s"missing string field '$f'")
-            v.asText
-          }
           // format validation (DatasetRegistry.AllowedFormats) happens at
           // the shared write path — one gate for REST and the gql mutation
-          val format = req("format")
+          val format = stringField(node, "format")
           val options: Map[String, String] =
             if (!node.has("options")) Map.empty
             else {
@@ -428,12 +440,13 @@ object Server {
               b.result()
             }
           val e = DatasetRegistry.register(
-            CatalogStore.Entry(req("name"), req("path"), format, options),
+            CatalogStore.Entry(stringField(node, "name"), stringField(node, "path"),
+              format, options),
             validateWith)
           val out = mapper.createObjectNode()
           val n = out.putObject("registered")
           n.put("name", e.name); n.put("path", e.path); n.put("format", e.format)
-          (200, mapper.writeValueAsString(out))
+          mapper.writeValueAsString(out)
         case "DELETE" =>
           val n = name.getOrElse(
             throw new IllegalArgumentException("DELETE /datasets/<name>"))
@@ -441,23 +454,12 @@ object Server {
             throw new NoSuchElementException(s"no such dataset: '$n'")
           val out = mapper.createObjectNode()
           out.put("unregistered", n.toLowerCase)
-          (200, mapper.writeValueAsString(out))
+          mapper.writeValueAsString(out)
         case other =>
           throw new UnsupportedOperationException(
             s"unsupported method $other (GET | POST | DELETE /datasets/<name>)")
       }
-    } catch {
-      case e: Throwable =>
-        val err = mapper.createObjectNode()
-        err.put("error", Option(e.getMessage).getOrElse(e.getClass.getName))
-        val code = e match {
-          case _: NoSuchElementException => 404
-          case _: UnsupportedOperationException => 405
-          case _ => 400
-        }
-        (code, mapper.writeValueAsString(err))
     }
-  }
 
   /** The saved-query JSON protocol (round 15, verdict item 1 — the
     * karna-db surface's third implied object). Shared by the HTTP routes
@@ -483,9 +485,9 @@ object Server {
     * is mapped at the HTTP layer, which owns the catalog state.
     */
   def handleQueries(spark: SparkSession, method: String, path: Option[String],
-                    body: String): (Int, String) = {
-    try {
-      graft.dialects.SavedQueries.syncIfStale() // list/run/delete see peer saves
+                    body: String): (Int, String) =
+    statusJson {
+      CatalogStore.syncIfStale() // list/run/delete see peer saves
       def node = mapper.readTree(if (body.isEmpty) "{}" else body)
       (method, path) match {
         case ("GET", None) =>
@@ -495,20 +497,15 @@ object Server {
             val n = arr.addObject()
             n.put("name", e.name); n.put("dialect", e.dialect); n.put("text", e.text)
           }
-          (200, mapper.writeValueAsString(out))
+          mapper.writeValueAsString(out)
         case ("POST", None) =>
           val b = node
-          def req(f: String): String = {
-            val v = b.get(f)
-            require(v != null && v.isTextual, s"missing string field '$f'")
-            v.asText
-          }
-          val e = graft.dialects.SavedQueries.save(spark,
-            graft.dialects.SavedQueries.Entry(req("name"), req("dialect"), req("text")))
+          val e = graft.dialects.SavedQueries.save(spark, graft.dialects.SavedQueries.Entry(
+            stringField(b, "name"), stringField(b, "dialect"), stringField(b, "text")))
           val out = mapper.createObjectNode()
           val n = out.putObject("saved")
           n.put("name", e.name); n.put("dialect", e.dialect)
-          (200, mapper.writeValueAsString(out))
+          mapper.writeValueAsString(out)
         case ("POST", Some(p)) if p.endsWith("/run") =>
           val name = p.stripSuffix("/run")
           val saved = graft.dialects.SavedQueries.get(name).getOrElse(
@@ -521,36 +518,23 @@ object Server {
           val req = mapper.createObjectNode()
           req.put("dialect", saved.dialect)
           req.put("query", saved.text)
-          val dir = b.get("dir")
-          require(dir != null && dir.isTextual, "missing string field 'dir'")
-          req.put("dir", dir.asText)
+          req.put("dir", stringField(b, "dir"))
           if (b.has("maxRows")) req.set("maxRows", b.get("maxRows"))
           if (b.has("params")) req.set("params", b.get("params"))
           if (b.has("explain")) req.set("explain", b.get("explain"))
-          (200, handleJson(spark, mapper.writeValueAsString(req)))
+          handleJson(spark, mapper.writeValueAsString(req))
         case ("DELETE", Some(p)) if !p.contains("/") =>
           if (!graft.dialects.SavedQueries.delete(p))
             throw new NoSuchElementException(s"no such saved query: '$p'")
           val out = mapper.createObjectNode()
           out.put("deleted", p.toLowerCase)
-          (200, mapper.writeValueAsString(out))
+          mapper.writeValueAsString(out)
         case (m, p) =>
           throw new UnsupportedOperationException(
             s"unsupported: $m /queries${p.fold("")("/" + _)} (GET | POST | " +
               "POST /queries/<name>/run | DELETE /queries/<name>)")
       }
-    } catch {
-      case e: Throwable =>
-        val err = mapper.createObjectNode()
-        err.put("error", Option(e.getMessage).getOrElse(e.getClass.getName))
-        val code = e match {
-          case _: NoSuchElementException => 404
-          case _: UnsupportedOperationException => 405
-          case _ => 400
-        }
-        (code, mapper.writeValueAsString(err))
     }
-  }
 
   /** The user-management JSON protocol (round 15 — the karna-db trio's
     * last object). The API key is generated server-side and returned
@@ -566,47 +550,34 @@ object Server {
     * /users write authenticates like everything else).
     */
   def handleUsers(method: String, name: Option[String],
-                  body: String): (Int, String) = {
-    try {
-      graft.sources.UserRegistry.syncIfStale() // list/delete see peer writes
+                  body: String): (Int, String) =
+    statusJson {
+      CatalogStore.syncIfStale() // list/delete see peer writes
       (method, name) match {
         case ("GET", None) =>
           val out = mapper.createObjectNode()
           val arr = out.putArray("users")
           graft.sources.UserRegistry.list.foreach(arr.add)
-          (200, mapper.writeValueAsString(out))
+          mapper.writeValueAsString(out)
         case ("POST", None) =>
-          val node = mapper.readTree(body)
-          val v = node.get("name")
-          require(v != null && v.isTextual, "missing string field 'name'")
-          val (n, key) = graft.sources.UserRegistry.create(v.asText)
+          val (n, key) = graft.sources.UserRegistry.create(
+            stringField(mapper.readTree(body), "name"))
           val out = mapper.createObjectNode()
           val c = out.putObject("created")
           c.put("name", n); c.put("apiKey", key)
-          (200, mapper.writeValueAsString(out))
+          mapper.writeValueAsString(out)
         case ("DELETE", Some(n)) =>
           if (!graft.sources.UserRegistry.delete(n))
             throw new NoSuchElementException(s"no such user: '$n'")
           val out = mapper.createObjectNode()
           out.put("deleted", n.toLowerCase)
-          (200, mapper.writeValueAsString(out))
+          mapper.writeValueAsString(out)
         case (m, p) =>
           throw new UnsupportedOperationException(
             s"unsupported: $m /users${p.fold("")("/" + _)} " +
               "(GET | POST | DELETE /users/<name>)")
       }
-    } catch {
-      case e: Throwable =>
-        val err = mapper.createObjectNode()
-        err.put("error", Option(e.getMessage).getOrElse(e.getClass.getName))
-        val code = e match {
-          case _: NoSuchElementException => 404
-          case _: UnsupportedOperationException => 405
-          case _ => 400
-        }
-        (code, mapper.writeValueAsString(err))
     }
-  }
 
   /** The browser console (the reference's headline surface — "a blazingly
     * fast web interface to query tabular files", README.md:2): one
@@ -639,9 +610,7 @@ object Server {
       // reference's karna-db shape)
       val c = if (d.startsWith("jdbc:")) JdbcCatalog.connectUrl(d)
               else JdbcCatalog.connect(d)
-      DatasetRegistry.attach(c) // replay durable rows: the restart path
-      graft.dialects.SavedQueries.attach(c) // ditto for saved queries
-      graft.sources.UserRegistry.attach(c)  // ditto for users (auth state)
+      CatalogStore.attach(c) // replay durable rows: the restart path
       DatasetRegistry.warmSchemas(spark) // replayed NL columns work pre-traffic
       c
     }
@@ -662,7 +631,7 @@ object Server {
       // replica must authenticate here now, and a peer's user deletion
       // must revoke access now — auth state is the one registry where
       // restart-latency staleness is a security property, not a UX nit
-      UserRegistry.syncIfStale()
+      CatalogStore.syncIfStale(Some(spark))
       if (!UserRegistry.authRequired) None
       else {
         val user = bearer(ex).flatMap(UserRegistry.authenticate)
@@ -726,7 +695,7 @@ object Server {
     http.createContext("/datasets", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val (code, resp) = authGate(ex).getOrElse {
-          if (catalogConn.isEmpty && ex.getRequestMethod != "GET")
+          if (!CatalogStore.isDurable && ex.getRequestMethod != "GET")
             (503, """{"error":"no catalog configured (start the server with a catalog directory to register datasets)"}""")
           else {
             // path suffix names the dataset for DELETE /datasets/<name>
@@ -753,7 +722,7 @@ object Server {
         val isWrite = ex.getRequestMethod == "DELETE" ||
           (ex.getRequestMethod == "POST" && !name.exists(_.endsWith("/run")))
         val (code, resp) = authGate(ex).getOrElse {
-          if (catalogConn.isEmpty && isWrite)
+          if (!CatalogStore.isDurable && isWrite)
             (503, """{"error":"no catalog configured (start the server with a catalog directory to save queries)"}""")
           else {
             val body = new String(ex.getRequestBody.readAllBytes(),
@@ -775,7 +744,7 @@ object Server {
         // closes that window; once any user exists, every /users request
         // authenticates like the data routes
         val (code, resp) = bootstrapGate(ex).orElse(authGate(ex)).getOrElse {
-          if (catalogConn.isEmpty && ex.getRequestMethod != "GET")
+          if (!CatalogStore.isDurable && ex.getRequestMethod != "GET")
             (503, """{"error":"no catalog configured (start the server with a catalog directory to manage users)"}""")
           else {
             val body = new String(ex.getRequestBody.readAllBytes(),
@@ -811,10 +780,7 @@ object Server {
     def boundPort: Int = http.getAddress.getPort
     def stop(): Unit = {
       http.stop(0); pool.shutdown()
-      catalogConn.foreach { c =>
-        DatasetRegistry.detach(); graft.dialects.SavedQueries.detach()
-        graft.sources.UserRegistry.detach(); c.close()
-      }
+      catalogConn.foreach { c => CatalogStore.detach(); c.close() }
     }
   }
 }

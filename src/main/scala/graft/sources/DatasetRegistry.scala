@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.sql.Connection
-
 import org.apache.spark.sql.SparkSession
 
 /** The ONE dataset-registration write path (round 13, verdict items 2+7
@@ -14,11 +12,11 @@ import org.apache.spark.sql.SparkSession
   * durable catalog ([[JdbcCatalog]], when one is attached) can never
   * disagree about what is registered.
   *
-  * Durability is attachment-based: a serving process that opened a
-  * catalog DB attaches its connection once (loading existing rows into
-  * the process registry — the restart path); writes then go to BOTH
-  * stores. Without an attachment (unit tests, embedded use) the registry
-  * is process-lifetime only.
+  * Durability comes from [[CatalogStore]]: while a catalog is attached,
+  * writes go to BOTH stores under its lock, and its attach/sync replay the
+  * durable rows into the process registry through [[reload]]. Without an
+  * attachment (unit tests, embedded use) the registry is process-lifetime
+  * only.
   *
   * Scale note: O(registered datasets) rows of name→location metadata;
   * no data moves through this object.
@@ -33,56 +31,22 @@ object DatasetRegistry {
     */
   val AllowedFormats: Set[String] = Set("parquet", "csv", "json", "orc")
 
-  @volatile private var durable: Option[Connection] = None
-  @volatile private var lastSeenSeq: Long = -1L
-
-  /** Attach the durable catalog and replay its rows into the process
-    * registry — a restarted server resolves every previously registered
-    * name before serving its first request.
+  /** Reconcile the process registry with the durable rows (called by
+    * [[CatalogStore]] under its lock): rows a peer deleted vanish, new and
+    * re-pointed rows resolve.
     */
-  def attach(c: Connection): Unit = synchronized {
-    durable = Some(c)
-    JdbcCatalog.load(c).foreach(TableRegistry.registerDynamic)
-    lastSeenSeq = JdbcCatalog.readSeq(c)
+  private[sources] def reload(rows: Seq[CatalogStore.Entry]): Unit = {
+    val live = rows.map(_.name).toSet
+    TableRegistry.dynamicEntries.filterNot(e => live(e.name))
+      .foreach(e => TableRegistry.unregisterDynamic(e.name))
+    rows.foreach(TableRegistry.registerDynamic)
   }
 
-  /** Cross-process coherence (round 17, verdict item 4 — the DEPLOY.md §5
-    * multi-replica shape): compare the catalog's global write stamp
-    * against the last value this process saw; when it moved, reconcile
-    * the process registry against the durable rows — peer REGISTRATIONS
-    * appear (an entry re-pointed under the same name resolves its new
-    * path on the next load: schemas are cached per path and file stamp,
-    * not per name), peer UNREGISTRATIONS vanish. Called at
-    * the serving read paths, so a replica observes its peers' writes on
-    * the next request, not at its next restart. Cost when nothing
-    * changed: one single-row SELECT on the catalog connection. No-op
-    * without an attachment (embedded/test use).
-    *
-    * The durable catalog is authoritative while attached: every local
-    * write goes to both stores (register/unregister above), so a
-    * process-only entry the durable store lacks can only mean a peer
-    * deleted it.
+  /** [[CatalogStore.syncIfStale]], for the benchmark harness, which calls
+    * it by this name.
     */
-  def syncIfStale(warmWith: Option[SparkSession] = None): Unit = {
-    val c0 = durable
-    if (c0.isEmpty) return
-    val c = c0.get
-    if (JdbcCatalog.readSeq(c) == lastSeenSeq) return
-    synchronized {
-      durable.foreach { c =>
-        val seq = JdbcCatalog.readSeq(c)
-        if (seq != lastSeenSeq) {
-          val rows = JdbcCatalog.load(c)
-          val live = rows.map(_.name).toSet
-          TableRegistry.dynamicEntries.filterNot(e => live(e.name))
-            .foreach(e => TableRegistry.unregisterDynamic(e.name))
-          rows.foreach(TableRegistry.registerDynamic)
-          warmWith.foreach(warmSchemas)
-          lastSeenSeq = seq
-        }
-      }
-    }
-  }
+  def syncIfStale(warmWith: Option[SparkSession] = None): Unit =
+    CatalogStore.syncIfStale(warmWith)
 
   /** Bring every registration's cached schema up to date with its file:
     * one stat when nothing changed, an inference when the schema is
@@ -104,20 +68,6 @@ object DatasetRegistry {
             s"'${e.path}': ${t.getMessage}")
       }
     }
-
-  /** Detach (tests / shutdown). Process-registry entries remain until
-    * individually unregistered — detaching must not yank tables out from
-    * under in-flight queries.
-    */
-  def detach(): Unit = synchronized { durable = None }
-
-  /** Whether a durable catalog is attached — the serving layer's guard:
-    * registration writes on a catalog-less server are rejected LOUDLY at
-    * every surface (REST already did; round-14 ADVICE extended the guard
-    * to GraphQL mutations arriving via POST /query) instead of silently
-    * creating process-lifetime-only state.
-    */
-  def isDurable: Boolean = durable.nonEmpty
 
   /** Optional registered-path prefix allowlist (round-14 ADVICE: a
     * registration names a SERVER-side path, so on a deployment with
@@ -147,38 +97,40 @@ object DatasetRegistry {
     * broke every SQL request server-wide until unregistered) — the probe
     * also warms the schema cache per path and file stamp, so per-request
     * view registration re-infers only after the file changes. A failed
-    * probe caches nothing.
+    * probe caches nothing. The probe runs before the catalog lock is
+    * taken, so a slow one never stalls a request's stamp read.
     */
   def register(e0: CatalogStore.Entry,
-               validateWith: Option[SparkSession] = None): CatalogStore.Entry =
-    synchronized {
-      val e = e0.copy(name = e0.name.toLowerCase, format = e0.format.toLowerCase)
-      require(AllowedFormats(e.format),
-        s"format must be one of ${AllowedFormats.toSeq.sorted.mkString(", ")}: " +
-          s"got '${e0.format}'")
-      TableRegistry.checkRegistrable(e)
-      checkPathAllowed(e.path)
-      validateWith.foreach { s =>
-        try TableRegistry.loadEntry(s, e).schema
-        catch { case scala.util.control.NonFatal(t) =>
-          throw new IllegalArgumentException(
-            s"dataset '${e.name}' is not loadable as ${e.format} at " +
-              s"${e.path}: ${t.getMessage}")
-        }
+               validateWith: Option[SparkSession] = None): CatalogStore.Entry = {
+    val e = e0.copy(name = e0.name.toLowerCase, format = e0.format.toLowerCase)
+    require(AllowedFormats(e.format),
+      s"format must be one of ${AllowedFormats.toSeq.sorted.mkString(", ")}: " +
+        s"got '${e0.format}'")
+    TableRegistry.checkRegistrable(e)
+    checkPathAllowed(e.path)
+    validateWith.foreach { s =>
+      try TableRegistry.loadEntry(s, e).schema
+      catch { case scala.util.control.NonFatal(t) =>
+        throw new IllegalArgumentException(
+          s"dataset '${e.name}' is not loadable as ${e.format} at " +
+            s"${e.path}: ${t.getMessage}")
       }
-      // name/shadowing validated above, so an invalid entry never reaches
-      // the durable store; if the durable write FAILS, roll the process
-      // entry back — the two stores must never diverge (an in-memory-only
-      // registration would resolve until restart, then silently vanish)
+    }
+    // name/shadowing validated above, so an invalid entry never reaches
+    // the durable store; if the durable write FAILS, roll the process
+    // entry back — the two stores must never diverge (an in-memory-only
+    // registration would resolve until restart, then silently vanish)
+    CatalogStore.write { durable =>
       TableRegistry.registerDynamic(e)
       try durable.foreach(JdbcCatalog.register(_, e))
       catch { case t: Throwable =>
         TableRegistry.unregisterDynamic(e.name); throw t
       }
-      e
     }
+    e
+  }
 
-  def unregister(name: String): Boolean = synchronized {
+  def unregister(name: String): Boolean = CatalogStore.write { durable =>
     // durable FIRST (round-14 ADVICE: the mirror of register's rollback —
     // removing the process entry first meant a durable-delete failure
     // left a row that silently resurrected the "unregistered" dataset on

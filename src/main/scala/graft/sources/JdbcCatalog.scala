@@ -4,8 +4,6 @@ import java.sql.{Connection, DriverManager, SQLException}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** JDBC-backed metadata catalog of [[CatalogStore.Entry]] records,
@@ -21,15 +19,22 @@ import scala.jdk.CollectionConverters._
   * written against the lowest-common-denominator surface (no Derby-only
   * syntax).
   *
-  * Concurrency contract: writes are serialized transactions
-  * (delete+insert of one name under TRANSACTION_SERIALIZABLE), so two
-  * clients registering concurrently cannot corrupt the table or lose each
-  * other's rows — the multi-writer semantics the reference's Postgres
+  * Concurrency contract: every write (datasets, saved queries, users) is
+  * one serializable transaction through the private `write`, which also
+  * moves the `catalog_seq` coherence stamp and retries the dialect's
+  * transient conflict states, so two clients writing at once cannot
+  * corrupt a table or lose each other's rows — the multi-writer
+  * semantics the reference's Postgres
   * choice implies, proven by ServingSpec's concurrent-session test.
   * Embedded Derby scopes "client" to connections within one JVM (the
   * driver process — where catalog access lives); a multi-process
   * deployment swaps the URL to Derby network server or Postgres and the
   * code is unchanged.
+  *
+  * This object is storage only and stateless about connections: a serving
+  * process attaches ONE connection through [[CatalogStore]], which
+  * serializes every use of it and decides when the process registries
+  * reload.
   *
   * Scale note: this holds table LOCATIONS, never data —
   * O(registered datasets), independent of corpus volume.
@@ -183,61 +188,63 @@ object JdbcCatalog {
     * write moved it, so `readSeq` ≠ a cached value ⇔ some peer (or this
     * process) has written since the cache was filled.
     */
-  def readSeq(c: Connection): Long = {
+  def readSeq(c: Connection): Long = query(c, "SELECT s FROM catalog_seq")(_.getLong(1)).head
+
+  /** Every row of one query on `c`, each read by `row`. */
+  private def query[T](c: Connection, sql: String)(row: java.sql.ResultSet => T): List[T] = {
     val st = c.createStatement()
     try {
-      val rs = st.executeQuery("SELECT s FROM catalog_seq")
-      try { rs.next(); rs.getLong(1) } finally rs.close()
+      val rs = st.executeQuery(sql)
+      val buf = List.newBuilder[T]
+      while (rs.next()) buf += row(rs)
+      rs.close()
+      buf.result()
     } finally st.close()
   }
 
-  /** Bump the coherence stamp — called INSIDE an open write transaction,
-    * so the stamp moves iff the write commits.
+  /** The one metadata write: `body` runs inside a serializable
+    * transaction and returns how many rows it changed; the stamp moves, in
+    * the same transaction, only when that is more than zero (a delete of an
+    * absent name must not trigger peer reloads). Transient conflicts (the
+    * connection dialect's deadlock / serialization states — the expected
+    * cost of SERIALIZABLE under contention, including the deliberate
+    * single-row hotspot on catalog_seq) roll back and retry; every other
+    * failure rolls back and rethrows.
     */
-  private def bumpSeq(c: Connection): Unit = {
-    val st = c.createStatement()
-    try st.executeUpdate("UPDATE catalog_seq SET s = s + 1") finally st.close()
-  }
-
-  /** Shared transient-conflict retry (deadlock / serialization failure —
-    * the expected cost of SERIALIZABLE under contention, now including
-    * the deliberate single-row hotspot on catalog_seq).
-    */
-  private def withRetry(c: Connection)(body: => Unit): Unit = {
+  private def write(c: Connection)(body: => Int): Int = {
     val dl = dialectOf(c)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      try { body; done = true }
-      catch {
-        case ex: SQLException
-            if dl.retryableStates(ex.getSQLState) && attempts < 5 =>
-          Thread.sleep(20L * attempts)
-      }
-    }
-  }
-
-  /** One parameterized DELETE + conditional stamp bump as a transaction:
-    * the stamp moves only when a row actually went away (a delete of an
-    * absent name must not trigger peer reloads).
-    */
-  private def deleteBump(c: Connection, sql: String, name: String): Boolean = {
-    var deleted = false
-    withRetry(c) {
+    var attempts = 1
+    var changed: Option[Int] = None
+    while (changed.isEmpty) {
       val auto = c.getAutoCommit
       c.setAutoCommit(false)
       try {
-        val st = c.prepareStatement(sql)
-        val n = try { st.setString(1, name); st.executeUpdate() } finally st.close()
-        if (n > 0) bumpSeq(c)
+        val n = body
+        if (n > 0) update(c, "UPDATE catalog_seq SET s = s + 1")
         c.commit()
-        deleted = n > 0
+        changed = Some(n)
       } catch {
-        case t: Throwable => c.rollback(); throw t
+        case t: Throwable =>
+          c.rollback()
+          t match {
+            case ex: SQLException if dl.retryableStates(ex.getSQLState) && attempts < 5 =>
+              Thread.sleep(20L * attempts); attempts += 1
+            case _ => throw t
+          }
       } finally c.setAutoCommit(auto)
     }
-    deleted
+    changed.get
+  }
+
+  /** One parameterized statement on `c`, its string parameters bound in
+    * order; returns the update count.
+    */
+  private def update(c: Connection, sql: String, params: String*): Int = {
+    val st = c.prepareStatement(sql)
+    try {
+      params.zipWithIndex.foreach { case (p, i) => st.setString(i + 1, p) }
+      st.executeUpdate()
+    } finally st.close()
   }
 
   private def hasTable(c: Connection, name: String): Boolean = {
@@ -294,69 +301,27 @@ object JdbcCatalog {
     } finally c.setAutoCommit(auto)
   }
 
-  /** Add-or-replace one registration — one serializable transaction, so
-    * concurrent writers interleave atomically (no lost updates, no
-    * duplicate-key crashes). Transient serialization conflicts (deadlock
-    * 40001 / lock timeout 40XL1 — the expected cost of SERIALIZABLE under
-    * contention) are retried; every other failure rolls back and rethrows.
+  /** Add-or-replace one registration: delete + insert of one name in one
+    * [[write]], so concurrent writers interleave atomically (no lost
+    * updates, no duplicate-key crashes).
     */
-  def register(c: Connection, e: CatalogStore.Entry): Unit = {
-    val dl = dialectOf(c)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      try { registerOnce(c, e); done = true }
-      catch {
-        case ex: SQLException
-            if dl.retryableStates(ex.getSQLState) && attempts < 5 =>
-          Thread.sleep(20L * attempts)
-      }
-    }
-  }
-
-  private def registerOnce(c: Connection, e: CatalogStore.Entry): Unit = {
-    val auto = c.getAutoCommit
-    c.setAutoCommit(false)
-    try {
-      val del = c.prepareStatement("DELETE FROM datasets WHERE name = ?")
-      try { del.setString(1, e.name); del.executeUpdate() } finally del.close()
-      val ins = c.prepareStatement(
-        "INSERT INTO datasets (name, path, format, options_json) VALUES (?, ?, ?, ?)")
-      try {
-        ins.setString(1, e.name)
-        ins.setString(2, e.path)
-        ins.setString(3, e.format)
-        val opts = mapper.createObjectNode()
-        e.options.foreach { case (k, v) => opts.put(k, v) }
-        ins.setString(4, mapper.writeValueAsString(opts))
-        ins.executeUpdate()
-      } finally ins.close()
-      bumpSeq(c)
-      c.commit()
-    } catch {
-      case t: Throwable => c.rollback(); throw t
-    } finally c.setAutoCommit(auto)
+  def register(c: Connection, e: CatalogStore.Entry): Unit = write(c) {
+    update(c, "DELETE FROM datasets WHERE name = ?", e.name)
+    val opts = mapper.createObjectNode()
+    e.options.foreach { case (k, v) => opts.put(k, v) }
+    update(c, "INSERT INTO datasets (name, path, format, options_json) VALUES (?, ?, ?, ?)",
+      e.name, e.path, e.format, mapper.writeValueAsString(opts))
   }
 
   def unregister(c: Connection, name: String): Boolean =
-    deleteBump(c, "DELETE FROM datasets WHERE name = ?", name)
+    write(c)(update(c, "DELETE FROM datasets WHERE name = ?", name)) > 0
 
-  def load(c: Connection): Seq[CatalogStore.Entry] = {
-    val st = c.createStatement()
-    try {
-      val rs = st.executeQuery(
-        "SELECT name, path, format, options_json FROM datasets ORDER BY name")
-      val buf = scala.collection.mutable.ListBuffer.empty[CatalogStore.Entry]
-      while (rs.next()) {
-        val opts = mapper.readTree(rs.getString(4)).properties().asScala
-          .map(e => e.getKey -> e.getValue.asText).toMap
-        buf += CatalogStore.Entry(rs.getString(1), rs.getString(2), rs.getString(3), opts)
-      }
-      rs.close()
-      buf.toList
-    } finally st.close()
-  }
+  def load(c: Connection): Seq[CatalogStore.Entry] =
+    query(c, "SELECT name, path, format, options_json FROM datasets ORDER BY name") { rs =>
+      val opts = mapper.readTree(rs.getString(4)).properties().asScala
+        .map(e => e.getKey -> e.getValue.asText).toMap
+      CatalogStore.Entry(rs.getString(1), rs.getString(2), rs.getString(3), opts)
+    }
 
   /** One durable saved query: `name → (dialect, query text)` — the
     * karna-db surface's third object (round 15). Storage-shaped only;
@@ -365,59 +330,23 @@ object JdbcCatalog {
     */
   final case class SavedQuery(name: String, dialect: String, text: String)
 
-  /** Add one saved query — same serialized-transaction + transient-retry
-    * discipline as dataset [[register]]. INSERT only (no delete-first):
-    * duplicate names are REJECTED at the registry layer, and the primary
-    * key backstops a racing duplicate with a loud constraint error
-    * rather than a silent overwrite.
+  /** Add one saved query. INSERT only (no delete-first): duplicate names
+    * are REJECTED at the registry layer, and the primary key backstops a
+    * racing duplicate with a loud constraint error rather than a silent
+    * overwrite.
     */
-  def saveQuery(c: Connection, q: SavedQuery): Unit = {
-    val dl = dialectOf(c)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      try { saveQueryOnce(c, q); done = true }
-      catch {
-        case ex: SQLException
-            if dl.retryableStates(ex.getSQLState) && attempts < 5 =>
-          Thread.sleep(20L * attempts)
-      }
-    }
-  }
-
-  private def saveQueryOnce(c: Connection, q: SavedQuery): Unit = {
-    val auto = c.getAutoCommit
-    c.setAutoCommit(false)
-    try {
-      val ins = c.prepareStatement(
-        "INSERT INTO saved_queries (name, dialect, qtext) VALUES (?, ?, ?)")
-      try {
-        ins.setString(1, q.name); ins.setString(2, q.dialect); ins.setString(3, q.text)
-        ins.executeUpdate()
-      } finally ins.close()
-      bumpSeq(c)
-      c.commit()
-    } catch {
-      case t: Throwable => c.rollback(); throw t
-    } finally c.setAutoCommit(auto)
+  def saveQuery(c: Connection, q: SavedQuery): Unit = write(c) {
+    update(c, "INSERT INTO saved_queries (name, dialect, qtext) VALUES (?, ?, ?)",
+      q.name, q.dialect, q.text)
   }
 
   def deleteQuery(c: Connection, name: String): Boolean =
-    deleteBump(c, "DELETE FROM saved_queries WHERE name = ?", name)
+    write(c)(update(c, "DELETE FROM saved_queries WHERE name = ?", name)) > 0
 
-  def loadQueries(c: Connection): Seq[SavedQuery] = {
-    val st = c.createStatement()
-    try {
-      val rs = st.executeQuery(
-        "SELECT name, dialect, qtext FROM saved_queries ORDER BY name")
-      val buf = scala.collection.mutable.ListBuffer.empty[SavedQuery]
-      while (rs.next())
-        buf += SavedQuery(rs.getString(1), rs.getString(2), rs.getString(3))
-      rs.close()
-      buf.toList
-    } finally st.close()
-  }
+  def loadQueries(c: Connection): Seq[SavedQuery] =
+    query(c, "SELECT name, dialect, qtext FROM saved_queries ORDER BY name") { rs =>
+      SavedQuery(rs.getString(1), rs.getString(2), rs.getString(3))
+    }
 
   /** One durable user: `name → SHA-256(api key)` (round 15 — the trio's
     * last object). Storage only; key generation/verification lives at
@@ -428,58 +357,15 @@ object JdbcCatalog {
   /** INSERT-only like saveQuery — duplicate user names are rejected at
     * the registry and backstopped by the primary key.
     */
-  def addUser(c: Connection, u: User): Unit = {
-    val dl = dialectOf(c)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      try { addUserOnce(c, u); done = true }
-      catch {
-        case ex: SQLException
-            if dl.retryableStates(ex.getSQLState) && attempts < 5 =>
-          Thread.sleep(20L * attempts)
-      }
-    }
-  }
-
-  private def addUserOnce(c: Connection, u: User): Unit = {
-    val auto = c.getAutoCommit
-    c.setAutoCommit(false)
-    try {
-      val ins = c.prepareStatement(
-        "INSERT INTO users (name, api_key_hash) VALUES (?, ?)")
-      try {
-        ins.setString(1, u.name); ins.setString(2, u.apiKeyHash)
-        ins.executeUpdate()
-      } finally ins.close()
-      bumpSeq(c)
-      c.commit()
-    } catch {
-      case t: Throwable => c.rollback(); throw t
-    } finally c.setAutoCommit(auto)
+  def addUser(c: Connection, u: User): Unit = write(c) {
+    update(c, "INSERT INTO users (name, api_key_hash) VALUES (?, ?)", u.name, u.apiKeyHash)
   }
 
   def deleteUser(c: Connection, name: String): Boolean =
-    deleteBump(c, "DELETE FROM users WHERE name = ?", name)
+    write(c)(update(c, "DELETE FROM users WHERE name = ?", name)) > 0
 
-  def loadUsers(c: Connection): Seq[User] = {
-    val st = c.createStatement()
-    try {
-      val rs = st.executeQuery("SELECT name, api_key_hash FROM users ORDER BY name")
-      val buf = scala.collection.mutable.ListBuffer.empty[User]
-      while (rs.next()) buf += User(rs.getString(1), rs.getString(2))
-      rs.close()
-      buf.toList
-    } finally st.close()
-  }
-
-  /** Project every cataloged dataset into the session as a temp view —
-    * the restart path: a brand-new SparkSession + a fresh connection
-    * reproduces the queryable catalog.
-    */
-  def registerAll(s: SparkSession, c: Connection): Unit =
-    load(c).foreach { e =>
-      graft.Tables.read(s, e.path, e.format, e.options).createOrReplaceTempView(e.name)
+  def loadUsers(c: Connection): Seq[User] =
+    query(c, "SELECT name, api_key_hash FROM users ORDER BY name") { rs =>
+      User(rs.getString(1), rs.getString(2))
     }
 }

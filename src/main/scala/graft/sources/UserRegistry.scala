@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.sql.Connection
 
 /** The ONE user write path (round 15 — the last object the reference's
   * karna-db crate implies: its Postgres catalog + web surface pair means
@@ -13,8 +12,9 @@ import java.sql.Connection
   * base64url), returned EXACTLY ONCE at creation, and only its SHA-256
   * is stored — neither the process map nor the durable catalog ever
   * holds a plaintext credential, so the catalog DB leaking cannot leak
-  * keys. Same attach/replay + rollback discipline as [[DatasetRegistry]]
-  * and SavedQueries, so the three metadata registries behave identically.
+  * keys. [[CatalogStore]] attaches, replays and syncs it together with
+  * [[DatasetRegistry]] and SavedQueries, and it keeps their rollback
+  * discipline, so the three metadata registries behave identically.
   *
   * Enforcement lives at the HTTP edge ([[graft.server.Server.HttpApi]]):
   * while NO users exist, the server is open (the embedded/trusted
@@ -30,14 +30,12 @@ object UserRegistry {
 
   private val ValidName = "[A-Za-z_][A-Za-z0-9_]*".r
 
-  @volatile private var durable: Option[Connection] = None
-
   /** name → SHA-256(api key) hex. */
   private val process =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** SHA-256(api key) hex → name: the authenticate-path reverse index,
-    * maintained in lockstep with `process` under this object's lock.
+    * maintained in lockstep with `process` under the catalog lock.
     */
   private val byHash =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -49,46 +47,16 @@ object UserRegistry {
       .digest(s.getBytes(StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
 
-  def attach(c: Connection): Unit = synchronized {
-    durable = Some(c)
-    JdbcCatalog.loadUsers(c).foreach { u =>
-      process.put(u.name, u.apiKeyHash)
-      byHash.put(u.apiKeyHash, u.name)
-    }
-    lastSeenSeq = JdbcCatalog.readSeq(c)
-  }
-
-  @volatile private var lastSeenSeq: Long = -1L
-
-  /** Cross-process coherence (round 17 — same stamp-compare-reload
-    * contract as DatasetRegistry.syncIfStale). Auth is where this matters
-    * most: a key issued by a peer replica must authenticate HERE on the
-    * next request, and a peer's user deletion must revoke access NOW, not
-    * at this replica's next restart. Both maps are rebuilt together under
-    * the object lock, preserving the process/byHash lockstep invariant.
+  /** Rebuild both maps from the durable rows (called by [[CatalogStore]]
+    * under its lock, on attach and when the stamp moved). Auth is where
+    * coherence matters most: a key issued by a peer replica must
+    * authenticate HERE on the next request, and a peer's user deletion
+    * must revoke access NOW, not at this replica's next restart.
     */
-  def syncIfStale(): Unit = {
-    val c0 = durable
-    if (c0.isEmpty || JdbcCatalog.readSeq(c0.get) == lastSeenSeq) return
-    synchronized {
-      durable.foreach { c =>
-        val seq = JdbcCatalog.readSeq(c)
-        if (seq != lastSeenSeq) {
-          val rows = JdbcCatalog.loadUsers(c)
-          process.clear(); byHash.clear()
-          rows.foreach { u =>
-            process.put(u.name, u.apiKeyHash)
-            byHash.put(u.apiKeyHash, u.name)
-          }
-          lastSeenSeq = seq
-        }
-      }
-    }
+  private[sources] def reload(rows: Seq[JdbcCatalog.User]): Unit = {
+    CatalogStore.reconcile(process, rows.map(u => u.name -> u.apiKeyHash).toMap)
+    CatalogStore.reconcile(byHash, rows.map(u => u.apiKeyHash -> u.name).toMap)
   }
-
-  def detach(): Unit = synchronized { durable = None }
-
-  def isDurable: Boolean = durable.nonEmpty
 
   /** Whether authentication is REQUIRED: any user exists. */
   def authRequired: Boolean = !process.isEmpty
@@ -97,25 +65,27 @@ object UserRegistry {
     * the plaintext exists. Duplicate names reject (a re-keyed user is
     * DELETE + create, never a silent credential rotation).
     */
-  def create(name0: String): (String, String) = synchronized {
+  def create(name0: String): (String, String) = {
     val name = name0.toLowerCase
     require(ValidName.matches(name),
       s"user name must match ${ValidName.regex}: '$name'")
-    require(!process.containsKey(name),
-      s"user '$name' already exists (DELETE it first to re-key)")
-    val bytes = new Array[Byte](32)
-    rng.nextBytes(bytes)
-    val key = "gk_" + java.util.Base64.getUrlEncoder.withoutPadding
-      .encodeToString(bytes)
-    val hash = sha256Hex(key)
-    process.put(name, hash)
-    byHash.put(hash, name)
-    try durable.foreach(JdbcCatalog.addUser(_, JdbcCatalog.User(name, hash)))
-    catch {
-      case t: Throwable =>
-        process.remove(name); byHash.remove(hash); throw t
+    CatalogStore.write { durable =>
+      require(!process.containsKey(name),
+        s"user '$name' already exists (DELETE it first to re-key)")
+      val bytes = new Array[Byte](32)
+      rng.nextBytes(bytes)
+      val key = "gk_" + java.util.Base64.getUrlEncoder.withoutPadding
+        .encodeToString(bytes)
+      val hash = sha256Hex(key)
+      process.put(name, hash)
+      byHash.put(hash, name)
+      try durable.foreach(JdbcCatalog.addUser(_, JdbcCatalog.User(name, hash)))
+      catch {
+        case t: Throwable =>
+          process.remove(name); byHash.remove(hash); throw t
+      }
+      (name, key)
     }
-    (name, key)
   }
 
   /** Durable-first delete (the register-rollback mirror). Returns true if
@@ -123,7 +93,7 @@ object UserRegistry {
     * a peer process sharing the catalog wrote it) is still a real delete,
     * not a 404.
     */
-  def delete(name: String): Boolean = synchronized {
+  def delete(name: String): Boolean = CatalogStore.write { durable =>
     val n = name.toLowerCase
     val inDurable = durable.exists(JdbcCatalog.deleteUser(_, n))
     val prior = process.remove(n)

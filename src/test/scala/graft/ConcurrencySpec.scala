@@ -280,4 +280,95 @@ class ConcurrencySpec extends AnyFunSuite {
       } finally peer.close()
     } finally api.stop()
   }
+
+  test("dataset, saved-query and user writes at once on one attached catalog share its connection safely") {
+    // One Connection carries one transaction and one autocommit flag. A
+    // dataset registration, a saved query and a user written at once (the
+    // HTTP pool runs them on 8 threads), while readers sync the stamp,
+    // must neither commit nor roll back each other's work, nor leave
+    // autocommit off: a stamp read inside a transaction that never commits
+    // keeps its read lock on catalog_seq and blocks every peer's write.
+    import graft.dialects.SavedQueries
+    import graft.sources.UserRegistry
+    val catDb = Files.createTempDirectory("graft_one_lock").resolve("db").toString
+    val c = JdbcCatalog.connect(catDb)
+    val peer = JdbcCatalog.connect(catDb)
+    val rounds = 30
+    val pool = Executors.newFixedThreadPool(5)
+    try {
+      CatalogStore.attach(c)
+      val start = new CountDownLatch(1)
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      def writer(what: String)(write: Int => Unit) = pool.submit(new Runnable {
+        override def run(): Unit = {
+          start.await()
+          (0 until rounds).foreach { r =>
+            try write(r)
+            catch { case e: Exception => failures.add(s"$what r$r: $e") }
+          }
+        }
+      })
+      // odd rounds delete what they wrote, so both writes and deletes race
+      val writers = Seq(
+        writer("dataset") { r =>
+          val name = s"race_ds_$r"
+          DatasetRegistry.register(CatalogStore.Entry(name, s"$d/region.parquet", "parquet"))
+          if (r % 2 == 1) DatasetRegistry.unregister(name)
+        },
+        writer("query") { r =>
+          val name = s"race_q_$r"
+          SavedQueries.save(spark,
+            SavedQueries.Entry(name, "nl", "how many rows are in region"))
+          if (r % 2 == 1) SavedQueries.delete(name)
+        },
+        writer("user") { r =>
+          val name = s"race_u_$r"
+          UserRegistry.create(name)
+          if (r % 2 == 1) UserRegistry.delete(name)
+        })
+      val readers = (0 until 2).map { _ =>
+        pool.submit(new Runnable {
+          override def run(): Unit = {
+            start.await()
+            while (!stop.get()) {
+              try CatalogStore.syncIfStale()
+              catch { case e: Exception => failures.add(s"sync: $e") }
+            }
+          }
+        })
+      }
+      start.countDown()
+      writers.foreach(_.get(180, TimeUnit.SECONDS))
+      stop.set(true)
+      readers.foreach(_.get(60, TimeUnit.SECONDS))
+      assert(failures.isEmpty, failures.asScala.take(5).mkString("; "))
+
+      assert(c.getAutoCommit, "autocommit must be back on once the writers are done")
+      def race(names: Seq[String]) = names.filter(_.startsWith("race_")).sorted
+      assert(race(DatasetRegistry.list.map(_.name)) === race(JdbcCatalog.load(c).map(_.name)))
+      assert(race(SavedQueries.list.map(_.name)) === race(JdbcCatalog.loadQueries(c).map(_.name)))
+      assert(race(UserRegistry.list) === race(JdbcCatalog.loadUsers(c).map(_.name)))
+      assert(race(UserRegistry.list) === (0 until rounds by 2).map(r => s"race_u_$r").sorted)
+
+      // a peer's write still gets through: no read lock left on the stamp
+      val before = JdbcCatalog.readSeq(peer)
+      val bump = java.util.concurrent.CompletableFuture.runAsync(() =>
+        JdbcCatalog.register(peer,
+          CatalogStore.Entry("race_peer", s"$d/region.parquet", "parquet")))
+      bump.get(30, TimeUnit.SECONDS)
+      assert(JdbcCatalog.readSeq(peer) > before, "a peer write must move the stamp")
+    } finally {
+      pool.shutdownNow()
+      CatalogStore.detach()
+      if (!c.getAutoCommit) c.rollback()
+      (0 until rounds).foreach { r =>
+        TableRegistry.unregisterDynamic(s"race_ds_$r")
+        SavedQueries.delete(s"race_q_$r")
+        UserRegistry.delete(s"race_u_$r")
+      }
+      TableRegistry.unregisterDynamic("race_peer")
+      c.close(); peer.close()
+    }
+  }
 }

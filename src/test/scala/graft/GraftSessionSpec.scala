@@ -64,4 +64,20 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(sourcesContaining("registerAll(")
       .filter(p => p.startsWith("graft/server/") || p.startsWith("graft/dialects/")).isEmpty)
   }
+
+  test("one attached catalog: its connection and stamp live in CatalogStore, one write skeleton in JdbcCatalog") {
+    assert(sourcesContaining("lastSeenSeq") === Seq("graft/sources/CatalogStore.scala"))
+    assert(sourcesContaining("Option[Connection]") === Seq("graft/sources/CatalogStore.scala"))
+    for (registry <- Seq("graft/sources/DatasetRegistry.scala",
+                         "graft/sources/UserRegistry.scala",
+                         "graft/dialects/SavedQueries.scala"))
+      assert(!Files.readString(Paths.get("src/main/scala", registry)).contains("synchronized"),
+        registry)
+    val jdbc = Files.readString(Paths.get("src/main/scala/graft/sources/JdbcCatalog.scala"))
+    def count(needle: String): Int = jdbc.sliding(needle.length).count(_ == needle)
+    assert(count("retryableStates(") === 1, "one retry loop")
+    assert(count("UPDATE catalog_seq") === 1, "one stamp bump")
+    // the write transaction and the migration ladder's own
+    assert(count("setAutoCommit(false)") === 2)
+  }
 }

@@ -394,17 +394,23 @@ class ServingSpec extends AnyFunSuite {
     finally { c1.close(); c2.close() }
 
     // the restart path: fresh connection (re-runs the migration ladder as
-    // a no-op) + brand-new session reproduces the queryable catalog
+    // a no-op) attached as a restarted server does + brand-new session
+    // reproduces the queryable catalog
     val c3 = JdbcCatalog.connect(dbDir)
     try {
       val fresh = spark.newSession()
       assert(!fresh.catalog.tableExists("ds_3"))
-      JdbcCatalog.registerAll(fresh, c3)
+      CatalogStore.attach(c3)
+      TableRegistry.registerAll(fresh, d)
       assert(fresh.table("ds_3").count() ===
         spark.read.parquet(s"$d/orders.parquet").count())
       assert(fresh.table("ds_1").count() ===
         spark.read.parquet(s"$d/nation.parquet").count())
-    } finally c3.close()
+    } finally {
+      CatalogStore.detach()
+      (1 to 12).foreach(i => TableRegistry.unregisterDynamic(s"ds_$i"))
+      c3.close()
+    }
   }
 
   test("JDBC catalog on REAL Postgres: identical migration+upsert suite (SKIPS loudly when none reachable)") {
@@ -722,10 +728,13 @@ class ServingSpec extends AnyFunSuite {
     val c = JdbcCatalog.connect(catDb)
     try {
       JdbcCatalog.register(c, CatalogStore.Entry("s3_orders", uri, "parquet"))
+      CatalogStore.attach(c)
       val fresh = spark.newSession()
-      JdbcCatalog.registerAll(fresh, c)
+      TableRegistry.registerAll(fresh, d)
       assert(fresh.sql("SELECT count(*) AS n FROM s3_orders").collect()(0).getLong(0) === 100)
-    } finally c.close()
+    } finally {
+      CatalogStore.detach(); TableRegistry.unregisterDynamic("s3_orders"); c.close()
+    }
   }
 
   // ---- per-request isolation + serving hardening ------------------------
@@ -1221,7 +1230,7 @@ class ServingSpec extends AnyFunSuite {
     val c = JdbcCatalog.connect(catDb)
     try {
       // attach over an EMPTY catalog first (nothing replays)…
-      DatasetRegistry.attach(c); SavedQueries.attach(c); UserRegistry.attach(c)
+      CatalogStore.attach(c)
       // …then a PEER process sharing the catalog writes rows directly:
       // this process's maps never see them (DEPLOY.md §5 shape)
       JdbcCatalog.register(c, CatalogStore.Entry("peer_ds", s"$d/nation.parquet",
@@ -1246,7 +1255,7 @@ class ServingSpec extends AnyFunSuite {
       assert(SavedQueries.delete("never_was") === false)
       assert(UserRegistry.delete("never_was") === false)
     } finally {
-      DatasetRegistry.detach(); SavedQueries.detach(); UserRegistry.detach()
+      CatalogStore.detach()
       SavedQueries.delete("peer_q"); UserRegistry.delete("peer_u")
       c.close()
     }
@@ -1291,7 +1300,7 @@ class ServingSpec extends AnyFunSuite {
     val mine = JdbcCatalog.connect(catDb)
     val peer = JdbcCatalog.connect(catDb)
     try {
-      DatasetRegistry.attach(mine); SavedQueries.attach(mine); UserRegistry.attach(mine)
+      CatalogStore.attach(mine)
 
       // -- datasets: peer registers; the next serving request HERE sees it
       JdbcCatalog.register(peer,
@@ -1306,7 +1315,7 @@ class ServingSpec extends AnyFunSuite {
       // its schema-cache slot) must follow, not serve the stale path
       JdbcCatalog.register(peer,
         CatalogStore.Entry("coh_ds", s"$d/region.parquet", "parquet"))
-      DatasetRegistry.syncIfStale(Some(spark))
+      CatalogStore.syncIfStale(Some(spark))
       assert(DatasetRegistry.list.find(_.name == "coh_ds")
         .get.path.endsWith("region.parquet"))
       assert(Server.handle(spark, Server.ServeRequest("sql",
@@ -1314,7 +1323,7 @@ class ServingSpec extends AnyFunSuite {
 
       // peer unregisters: gone here without a restart
       JdbcCatalog.unregister(peer, "coh_ds")
-      DatasetRegistry.syncIfStale(None)
+      CatalogStore.syncIfStale(None)
       assert(!TableRegistry.isDynamic("coh_ds"))
 
       // and the reverse direction: a LOCAL registry write is immediately
@@ -1331,10 +1340,10 @@ class ServingSpec extends AnyFunSuite {
       JdbcCatalog.saveQuery(peer, JdbcCatalog.SavedQuery(
         "coh_q", "sql", "SELECT r_regionkey FROM region ORDER BY r_regionkey"))
       assert(SavedQueries.get("coh_q").isEmpty, "no sync ran yet")
-      SavedQueries.syncIfStale()
+      CatalogStore.syncIfStale()
       assert(SavedQueries.get("coh_q").exists(_.dialect == "sql"))
       JdbcCatalog.deleteQuery(peer, "coh_q")
-      SavedQueries.syncIfStale()
+      CatalogStore.syncIfStale()
       assert(SavedQueries.get("coh_q").isEmpty)
 
       // -- users: a peer-issued key authenticates HERE now, and a peer
@@ -1342,17 +1351,17 @@ class ServingSpec extends AnyFunSuite {
       val key = "gk_coherence_test_key"
       JdbcCatalog.addUser(peer,
         JdbcCatalog.User("coh_user", UserRegistry.sha256Hex(key)))
-      UserRegistry.syncIfStale()
+      CatalogStore.syncIfStale()
       assert(UserRegistry.authenticate(key) === Some("coh_user"))
       JdbcCatalog.deleteUser(peer, "coh_user")
-      UserRegistry.syncIfStale()
+      CatalogStore.syncIfStale()
       assert(UserRegistry.authenticate(key) === None)
       assert(!UserRegistry.authRequired, "revocation must also reopen the server")
 
       // -- the quiet fast path: syncing with no changes reads the stamp
       // but never writes it (no reload storms between idle replicas)
       val s1 = JdbcCatalog.readSeq(mine)
-      DatasetRegistry.syncIfStale(None); SavedQueries.syncIfStale(); UserRegistry.syncIfStale()
+      CatalogStore.syncIfStale(None)
       assert(JdbcCatalog.readSeq(mine) === s1, "sync must never move the stamp")
 
       // -- a delete of an ABSENT name must not move the stamp either
@@ -1360,7 +1369,7 @@ class ServingSpec extends AnyFunSuite {
       JdbcCatalog.unregister(peer, "never_was")
       assert(JdbcCatalog.readSeq(mine) === s1)
     } finally {
-      DatasetRegistry.detach(); SavedQueries.detach(); UserRegistry.detach()
+      CatalogStore.detach()
       TableRegistry.unregisterDynamic("coh_ds"); TableRegistry.unregisterDynamic("coh_mine")
       SavedQueries.delete("coh_q"); UserRegistry.delete("coh_user")
       mine.close(); peer.close()
@@ -1371,7 +1380,7 @@ class ServingSpec extends AnyFunSuite {
     import graft.dialects.SavedQueries
     val dbDir = Files.createTempDirectory("graft_q_rollback").resolve("db").toString
     val c = JdbcCatalog.connect(dbDir)
-    SavedQueries.attach(c)
+    CatalogStore.attach(c)
     try {
       // close the connection out from under the registry: the durable
       // write MUST fail, and the process entry must not survive it (an
@@ -1381,13 +1390,13 @@ class ServingSpec extends AnyFunSuite {
         SavedQueries.Entry("doomed", "sql", "SELECT 1 AS one")))
       assert(SavedQueries.get("doomed").isEmpty,
         "process entry must roll back when the durable write fails")
-    } finally SavedQueries.detach()
+    } finally CatalogStore.detach()
   }
 
   test("a failed durable write rolls the process registration back (stores never diverge)") {
     val dbDir = Files.createTempDirectory("graft_rollback_cat").resolve("db").toString
     val c = JdbcCatalog.connect(dbDir)
-    DatasetRegistry.attach(c)
+    CatalogStore.attach(c)
     try {
       c.close() // durable writes now throw
       intercept[Exception] {
@@ -1398,7 +1407,7 @@ class ServingSpec extends AnyFunSuite {
       // restart then silently vanish — the registry must NOT carry it
       assert(DatasetRegistry.list.forall(_.name != "half_written"),
         "process registry diverged from the durable store")
-    } finally DatasetRegistry.detach()
+    } finally CatalogStore.detach()
   }
 
   test("/datasets without a configured catalog rejects writes loudly — and so do gql mutations via /query") {
@@ -1485,7 +1494,7 @@ class ServingSpec extends AnyFunSuite {
   test("a failed durable DELETE keeps the process entry (unregister mirrors register's rollback)") {
     val dbDir = Files.createTempDirectory("graft_unreg_cat").resolve("db").toString
     val c = JdbcCatalog.connect(dbDir)
-    DatasetRegistry.attach(c)
+    CatalogStore.attach(c)
     try {
       DatasetRegistry.register(CatalogStore.Entry(
         "sticky", s"$d/region.parquet", "parquet"))
@@ -1497,7 +1506,7 @@ class ServingSpec extends AnyFunSuite {
       assert(DatasetRegistry.list.exists(_.name == "sticky"),
         "unregister dropped the process entry despite the durable failure")
     } finally {
-      DatasetRegistry.detach()
+      CatalogStore.detach()
       graft.sources.TableRegistry.unregisterDynamic("sticky")
     }
   }
