@@ -100,8 +100,9 @@ object Bench {
     isolate(spark)
   }
 
-  // per-key isolation: the dedup/graph keys eagerly localCheckpoint
-  // intermediates that would otherwise stay persisted for the REST of
+  // per-key isolation: the keys behind PERF.md §19's 19 kept
+  // localCheckpoint sites (global running sums, the dedup/graph family)
+  // leave blocks that would otherwise stay persisted for the REST of
   // the run — ~200 keys of accumulated blocks turn into storage/GC
   // pressure that lands on whichever heavy key runs late (observed:
   // graph_triangles 5.9 s vs 48.7 s across two quiet-canary runs).

@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
 import graft.server.Server
@@ -9,11 +12,14 @@ import graft.server.Server
   *
   *   graft.Cli <sql|graphql|nl> <query> <dataDir> [--json] [--max-rows=N]
   *
-  * Routes through the same `Server.handle` seam as the HTTP API, so CLI,
-  * HTTP, and the driver harness all execute identical plans. Output is a
-  * text table (default) or JSON (the HTTP response body) with `--json`.
+  * Routes through the same `Server.handleJson` path as the HTTP API, so
+  * CLI and HTTP share one plan, one `maxRows` ceiling and one timeout.
+  * Output is a text table (default) or JSON (the HTTP response body) with
+  * `--json`.
   */
 object Cli {
+
+  private val mapper = new ObjectMapper()
 
   final case class CliArgs(dialect: String, query: String, dir: String,
                            json: Boolean, maxRows: Int)
@@ -34,29 +40,28 @@ object Cli {
     CliArgs(pos(0), pos(1), pos(2), json, maxRows)
   }
 
-  /** Run one query and return the printable result — separated from main
-    * so tests drive it against an existing session.
+  /** Run one query through `Server.handleJson` (the serving checks,
+    * timeout, metering and view cleanup) and return the printable result:
+    * the response body with `--json`, else a text table of its rows. In
+    * text mode an error body throws its message. Separated from main so
+    * tests drive it against an existing session.
     */
   def run(spark: SparkSession, a: CliArgs): String = {
-    if (a.json) {
-      // build the request body with Jackson (the same serializer the
-      // server uses) instead of a third hand-rolled JSON escaper
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val body = m.createObjectNode()
-      body.put("dialect", a.dialect); body.put("query", a.query)
-      body.put("dir", a.dir); body.put("maxRows", a.maxRows)
-      Server.handleJson(spark, m.writeValueAsString(body))
-    }
+    val body = mapper.createObjectNode()
+    body.put("dialect", a.dialect); body.put("query", a.query)
+    body.put("dir", a.dir); body.put("maxRows", a.maxRows)
+    val resp = Server.handleJson(spark, mapper.writeValueAsString(body))
+    if (a.json) resp
     else {
-      val df = Server.handle(spark, Server.ServeRequest(a.dialect, a.query, a.dir, a.maxRows))
-      table(df.columns, df.limit(a.maxRows).collect().map(_.toSeq.map(cell)))
+      val n = mapper.readTree(resp)
+      if (n.has("error")) sys.error(n.get("error").asText)
+      val cols = n.get("columns").elements().asScala.map(_.asText).toArray
+      // to_json omits null fields, so an absent field is a NULL cell
+      table(cols, n.get("rows").elements().asScala.map(r => cols.toSeq.map { c =>
+        val v = r.path(c)
+        if (v.isMissingNode || v.isNull) "NULL" else if (v.isTextual) v.asText else v.toString
+      }).toArray)
     }
-  }
-
-  private def cell(v: Any): String = v match {
-    case null          => "NULL"
-    case a: Seq[_]     => a.map(cell).mkString("[", ", ", "]")
-    case o             => o.toString
   }
 
   /** Minimal fixed-width text table (the CLI's human-readable output). */
@@ -73,20 +78,22 @@ object Cli {
   def main(args: Array[String]): Unit = {
     val a = parseArgs(args)
     val spark = GraftSession("graft-cli")
-    try {
+    // an error exits nonzero in both modes: with --json the error body is
+    // printed as it came, in text mode its message
+    val ok = try {
       val out = run(spark, a)
       println(out)
-      // with --json, handleJson converts failures into an {"error": ...}
-      // body instead of throwing — a scripting caller must still see a
-      // nonzero exit, same as the non-json path
-      if (a.json && isErrorBody(out)) sys.exit(1)
+      !(a.json && isErrorBody(out))
+    } catch {
+      case e: RuntimeException if !a.json => System.err.println(e.getMessage); false
     } finally spark.stop()
+    if (!ok) sys.exit(1)
   }
 
   /** True iff the JSON response is the serving protocol's error object. */
   private[graft] def isErrorBody(body: String): Boolean =
     try {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+      val n = mapper.readTree(body)
       n != null && n.has("error")
     } catch { case _: Exception => false }
 }

@@ -290,7 +290,7 @@ object MutantQueries {
           .distinct()
         val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
         val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        val ed = edges.join(deg, "src").localCheckpoint()
+        val ed = edges.join(deg, "src")
         val nodes = customer(s, d).select((col("c_custkey") * 2).as("node"))
           .union(supplier(s, d).select((col("s_suppkey") * 2 + 1).as("node")))
         var ranks = nodes.withColumn("rank_u", lit(1000000L))
@@ -600,7 +600,7 @@ object MutantQueries {
           .groupBy("vec_id")
           .agg(first(col("v")).as("v"), first(col("n")).as("n"),
             expr("sort_array(collect_list(sc))[0].c_id").as("cluster"))
-          .localCheckpoint(true)
+          .localCheckpoint(true) // §19 C14
         val a = assign.select(col("cluster"), col("vec_id").as("a"),
           col("v").as("av"), col("n").as("an"))
         val b = assign.select(col("cluster"), col("vec_id").as("b"),
@@ -635,7 +635,6 @@ object MutantQueries {
           .groupBy("vec_id")
           .agg(first(col("v")).as("v"), first(col("n")).as("n"),
             slice(sort_array(collect_list(col("sc"))), 1, 2).as("top2"))
-          .localCheckpoint(true)
         val members = assign
           .select(col("vec_id"), col("v"), col("n"),
             expr("top2[0].c_id").as("cluster"))
@@ -699,19 +698,18 @@ object MutantQueries {
           .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
           .distinct()
         val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-          .localCheckpoint(true)
         val srcs = customer(s, d)
           .filter(col("c_custkey") % 100 === 1) // BUG
           .select((col("c_custkey") * 2).as("node"))
-        var visited = srcs.withColumn("dist", lit(0L)).localCheckpoint(true)
+        var visited = srcs.withColumn("dist", lit(0L)).localCheckpoint(true) // §19 B3
         var frontier = visited
         for (k <- 1 to 3) {
           frontier = frontier.join(edges, frontier("node") === edges("src"))
             .select(edges("dst").as("node")).distinct()
             .join(visited, Seq("node"), "left_anti")
             .withColumn("dist", lit(k.toLong))
-            .localCheckpoint(true)
-          visited = visited.union(frontier).localCheckpoint(true)
+            .localCheckpoint(true) // §19 B4
+          visited = visited.union(frontier)
         }
         visited.groupBy("node").agg(min(col("dist")).as("dist"))
           .orderBy("node")
@@ -725,7 +723,7 @@ object MutantQueries {
         val okOrders = items.groupBy("ok").agg(count(lit(1)).as("n_items"))
           .filter(col("n_items").between(2, 25)).select("ok")
         val capped = items.join(okOrders, Seq("ok"), "left_semi")
-          .localCheckpoint(true)
+          .localCheckpoint(true) // §19 C1
         val itemN = capped.groupBy("pk").agg(count(lit(1)).as("n_item"))
         val totals = capped.agg(countDistinct(col("ok")).as("n_orders"))
         val pairs = capped.toDF("ok", "a").join(capped.toDF("ok", "b"), "ok")
@@ -939,7 +937,7 @@ object MutantQueries {
         val okOrders = items.groupBy("ok").agg(count(lit(1)).as("n_items"))
           .filter(col("n_items").between(2, 25)).select("ok")
         val capped = items.join(okOrders, Seq("ok"), "left_semi")
-          .localCheckpoint(true)
+          .localCheckpoint(true) // §19 C1
         val itemN = capped.groupBy("pk").agg(count(lit(1)).as("n_item"))
         val totals = capped.agg(countDistinct(col("ok")).as("n_orders"))
         val pairs = capped.toDF("ok", "a").join(capped.toDF("ok", "b"), "ok")

@@ -1066,14 +1066,6 @@ object GraphQL {
     }
   }
 
-  /** Whether the document's operation is a `mutation` — the serving
-    * layer's pre-flight check (round-14 ADVICE: mutations reaching the
-    * HTTP server on a catalog-less process must be rejected with the
-    * same loud no-catalog error the REST write surface gives, not
-    * silently applied as process-lifetime-only state).
-    */
-  def isMutation(q: String): Boolean = mutationRoot(q).nonEmpty
-
   /** The mutation's root field name, when the document IS a mutation —
     * the serving layer guards durability against the registry that root
     * actually writes (round 15: saveQuery/deleteQuery vs the dataset

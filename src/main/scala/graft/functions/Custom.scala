@@ -467,12 +467,10 @@ object Custom {
       // corpus (the old single-word ceiling was ~8·10⁷ docs; the old
       // fixed-8-bit plan collapsed at ~10⁴). At wb ≤ 15 every bit,
       // bucket value, and hamming total is bit-identical to the packed
-      // single-word form. The hash table is localCheckpoint'd once for
-      // its three consumers (bands + both verify probes); everything
-      // before the band join is map work. The census join-back is
-      // broadcastable by construction: the kept filter ENFORCES ≥2
-      // occupancy (singleton buckets produce no x.doc_id < y.doc_id
-      // pair, so the bound is output-neutral — lshCappedBuild's
+      // single-word form. Everything before the band join is map work.
+      // The census join-back is broadcastable by construction: the kept
+      // filter ENFORCES ≥2 occupancy (singleton buckets produce no
+      // x.doc_id < y.doc_id pair, so the bound is output-neutral — lshCappedBuild's
       // n_bkt ≥ 2 discipline), so the census is ≤ min(4·2^wb, 2·nd)
       // rows — bounded by the band value space at small wb AND
       // corpus-bounded at the 2^30 extreme; the self-join and verify
@@ -484,14 +482,10 @@ object Custom {
         .select(expr(phWbCase).as("wb"),
           expr("greatest(CAST(20 AS BIGINT), CAST(ceil(0.28 * sqrt(nd)) AS BIGINT))")
             .as("df_cap"))
-      // round 18 (phash probe, source in 22e7484, warm ×3 at sf0.1): full
-      // key ~2.3 s of which signature+checkpoint ~1.63 s and the
-      // band/census/verify half ~0.89 s. The signature floor is the
-      // pinned hash family itself (one portable md5 per byte-position
-      // shingle) plus one-time codegen of the 121-column aggregate — the
-      // bench's colder per-key number (~3.7 s) is dominated by that
-      // first-plan codegen, not by data work, so no further plan change
-      // moves it at fixture scale.
+      // round 18 (phash probe, warm ×3 at sf0.1): full key ~2.3 s, of
+      // which signature+checkpoint ~1.63 s; the floor is the pinned md5
+      // hash family plus one-time codegen of the 121-column aggregate.
+      // §19 C20: kept, measured slower without it
       val ph = phashWords(hx, knobs).localCheckpoint(true)
       val bands = ph
         .select(col("doc_id"), explode(array(

@@ -42,15 +42,11 @@ object Analytics {
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
     val okOrders = items.groupBy("ok").agg(count(lit(1)).as("n_items"))
       .filter(col("n_items").between(2, basketCap)).select("ok")
-    val capped = items.join(okOrders, Seq("ok"), "left_semi")
-      // 3 consumers (pair join ×2 branches + item counts + order total):
-      // materialize once, not three basket-cap recomputes
-      // (round 17: an in-row posting-list pair explode — the dedup_ngram
-      // shape — was tried here and A/B-measured SLOWER: the self-join is
-      // already co-partitioned on ok and codegen'd, while the HOF
-      // flatten/transform enumeration is interpreted; both are linear
-      // under the basket cap, so the codegen'd form stays)
-      .localCheckpoint(true)
+    // §19 C1: kept, the order-total branch prunes pk and re-scans lineitem
+    val capped = items.join(okOrders, Seq("ok"), "left_semi").localCheckpoint(true)
+    // (round 17: an in-row posting-list pair explode — the dedup_ngram
+    // shape — A/B-measured SLOWER than this co-partitioned, codegen'd
+    // self-join; both are linear under the basket cap)
     val itemN = capped.groupBy("pk").agg(count(lit(1)).as("n_item"))
     val totals = capped.agg(countDistinct(col("ok")).as("n_orders"))
     val pairs = capped.toDF("ok", "a").join(capped.toDF("ok", "b"), "ok")
@@ -367,14 +363,14 @@ object Analytics {
       val sess = Windows.sessionTag(events(s, dir))
         .groupBy("user_id", "session_seq")
         .agg(min(us).as("s_us"), max(us).as("e_us"))
-        .localCheckpoint(true) // 2 consumers: deltas below + n_sessions
+        .localCheckpoint(true) // §19 C2: kept, n_sessions runs in a later job than the deltas
       val deltas = sess.select(col("user_id"), col("session_seq"),
           col("s_us").as("us"), lit(1L).as("delta"))
         .unionByName(sess.select(col("user_id"), col("session_seq"),
           col("e_us").as("us"), lit(-1L).as("delta")))
       val ord = Seq(col("us"), col("delta").desc, col("user_id"), col("session_seq"))
       val run = Windows.globalRunning(deltas, ord, col("delta"), "c")._1
-        .localCheckpoint(true) // 2 consumers: peak agg + argmin filter
+        .localCheckpoint(true) // §19 C3: kept, measured slower without it
       val peak = run.agg(max(col("c")).as("peak"))
       val at = run.crossJoin(broadcast(peak)).filter(col("c") === col("peak"))
         .agg(min(col("us")).as("at_us"))
@@ -431,7 +427,7 @@ object Analytics {
       // output restricted to observed days by the dau join.
       val ud = events(s, dir)
         .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-        .localCheckpoint(true) // 2 consumers: dau + the 7-day projection
+        .localCheckpoint(true) // §19 C4: kept, an inferred null filter splits the two branches
       val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
       val wau = ud
         .select(col("user_id"),

@@ -89,7 +89,9 @@ object Derived {
       case e: java.util.concurrent.CompletionException if e.getCause != null =>
         throw e.getCause
     }
-    s.read.parquet(p)
+    // through the schema cache: a repeat read of the artifact starts no
+    // schema-inference job while the key is being built
+    graft.Tables.read(s, p)
   }
 
   /** Self seconds of every artifact built so far for dir `d`, by name: a

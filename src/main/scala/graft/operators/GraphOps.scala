@@ -18,9 +18,8 @@ import graft.Tables._
   * both sides hash-partitioned on the edge source) plus ONE keyed
   * aggregation (contribution sum on the edge target) — the canonical
   * Pregel-as-joins formulation. Nothing is ever collected to the driver;
-  * the edge list is localCheckpoint'd once so the 3 fixed iterations
-  * don't re-derive it (at cluster scale: per-iteration checkpoints to cut
-  * lineage growth, same discipline as dedup_cluster).
+  * the 3 fixed iterations share the edge list's and the degrees'
+  * exchanges (PERF.md §19 C17).
   *
   * Cross-engine determinism: the whole iteration runs in FIXED-POINT
   * integer arithmetic — ranks are BIGINT micro-units (1.0 = 1e6), the
@@ -68,9 +67,7 @@ object GraphOps {
   private def pagerank(s: SparkSession, d: String): DataFrame = {
     val edges = tradeEdges(s, d)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // materialize the (small: one row per distinct trade pair, both
-    // directions) edge+degree list once; 3 iterations reuse it
-    val ed = edges.join(deg, "src").localCheckpoint()
+    val ed = edges.join(deg, "src")
     val nodes = customer(s, d).select((col("c_custkey") * 2).as("node"))
       .union(supplier(s, d).select((col("s_suppkey") * 2 + 1).as("node")))
     var ranks = nodes.withColumn("rank_u", lit(1000000L))
@@ -113,9 +110,9 @@ object GraphOps {
       // left-anti join against the visited set (so a node is expanded
       // exactly once; without the prune the frontier re-expands every
       // node at every level and the work goes multiplicative in round
-      // count). Each level is localCheckpoint'd: the next round and the
-      // final union both consume it, and lineage would otherwise double
-      // per round. Visited state is (node, dist) — O(|V|), never edges.
+      // count). Each level is checkpointed (§19 B3, B4): the next round
+      // and the final union both consume it, and lineage would otherwise
+      // double per round. Visited state is (node, dist) — O(|V|), never edges.
       // Fixed round count ⇒ the oracle is the same search textually
       // unrolled (the pagerank discipline); min() over level unions is
       // belt-and-braces (levels are disjoint by construction).
@@ -131,14 +128,14 @@ object GraphOps {
       val srcs = customer(s, d)
         .filter(col("c_custkey") % 100 === 0)
         .select((col("c_custkey") * 2).as("node"))
-      var visited = srcs.withColumn("dist", lit(0L)).localCheckpoint(true)
+      var visited = srcs.withColumn("dist", lit(0L)).localCheckpoint(true) // §19 B3
       var frontier = visited
       for (k <- 1 to 3) {
         frontier = frontier.join(edges, frontier("node") === edges("src"))
           .select(edges("dst").as("node")).distinct()
           .join(visited, Seq("node"), "left_anti")
           .withColumn("dist", lit(k.toLong))
-          .localCheckpoint(true)
+          .localCheckpoint(true) // §19 B4
         // round 17: the union is NOT checkpointed — every leg is already
         // a materialized checkpoint, so the union's lineage is a constant-
         // depth tree of LogicalRDDs; eagerly re-materializing it per level
@@ -170,11 +167,7 @@ object GraphOps {
       // exactly once; per-vertex counts are orientation-independent, so
       // the id-ordered oracle is unchanged. Two equi-join shuffles on
       // vertex keys, same as before.
-      // EAGER localCheckpoint, not a lazy cache: the degree agg + three
-      // self-join branches below otherwise race to fill the cache inside
-      // one action and each re-derives the (expensive) minhash band join —
-      // the same materialize-once discipline as connectedComponents
-      // (measured 193 s → seconds at sf0.1 from this alone).
+      // §19 C18: kept, the degree branch and the e build share no exchange
       val e0 = Derived.bandPairs(s, d)
         .select("a", "b").distinct().localCheckpoint(true)
       val deg = e0.select(explode(array(col("a"), col("b"))).as("v"))
@@ -190,7 +183,7 @@ object GraphOps {
           when(ka < kb, col("a")).otherwise(col("b")).as("src"),
           when(ka < kb, col("b")).otherwise(col("a")).as("dst"),
           when(ka < kb, kb).otherwise(ka).as("kdst"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // §19 C19: kept, measured slower without it
       // e1.kdst < e2.kdst ⇒ the closing edge, if present, is oriented
       // exactly (e1.dst → e2.dst) — one membership probe, no direction
       // double-count

@@ -229,16 +229,13 @@ object TextOps {
     * arbitrary-alignment duplicates.
     */
   def spanDedup(tokTable: DataFrame): DataFrame = {
-    // the distinct span table feeds BOTH the df count and the probe side
-    // of the join — eager localCheckpoint so its shuffle runs once, not
-    // once per consumer (the dedup_near/PERF §5f discipline)
     val spans = tokTable.filter(size(col("t")) >= 12)
       .select(col("doc_id"), col("t"),
         explode(expr("sequence(0, size(t)-12)")).as("i"))
       .select(col("doc_id"),
         expr(h60Spark("concat_ws(' ', slice(t, i+1, 12))")).as("sp"))
       .distinct()
-      .localCheckpoint()
+      .localCheckpoint() // §19 C5: kept, measured slower without it
     // span-vocab-proportional — merge-locked (round-9 x30 lesson: the
     // static planner's post-aggregate underestimates can pick broadcast)
     val dfc = spans.groupBy("sp").agg(count(lit(1)).as("df")).hint("merge")
@@ -266,18 +263,7 @@ object TextOps {
     Derived.shinglePairStats(s, d)
 
   private[operators] def shinglePairStatsBuild(s: SparkSession, d: String): DataFrame = {
-    // EAGER localCheckpoint (the connectedComponents discipline), not a
-    // lazy cache: sh is consumed by THREE branches (df-count, candDocs
-    // semi-join, docSets) that otherwise race to fill the cache inside
-    // one action, each re-deriving the md5 shingle extraction.
-    // round 18 (checkpoint probe, source in 22e7484, order-alternated ×4
-    // at sf0.1): since round 17 the input is the materialized
-    // hashed_shingles parquet artifact, so dropping this checkpoint (three
-    // direct artifact scans) was measured — flat within noise (medians
-    // 3.05 ckpt vs 3.26 scan, 2 wins each).
-    // Kept: the copy costs nothing measurable here and keeps the build
-    // robust to the artifact growing past the page-cache at larger SFs.
-    val sh = hashedShingles(s, d).localCheckpoint(true)
+    val sh = hashedShingles(s, d)
     val rareSh = sh.groupBy("sh").agg(count(lit(1)).as("n_df"))
       .filter(col("n_df").between(2, 20))
       .select("sh")
@@ -291,7 +277,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 2)
       .select("a", "b")
-      .localCheckpoint(true) // consumed twice (candDocs + verify join); ~2 longs/row
+      .localCheckpoint(true) // §19 C7: kept, measured slower without it
     // verify stage ships only the CANDIDATE docs' full shingle sets.
     // Merge-locked, not merely un-hinted (the round-9 dedup_ngram ×30
     // lesson): candidate docs and their shingle sets are
@@ -436,18 +422,12 @@ object TextOps {
     // `labels` — before either cache is filled (measured 16.8s → 4.9s at
     // sf0.1 from this alone)
     e.count()
-    // Each round ends in an EAGER localCheckpoint, not a cache: a cached
-    // next still carries the previous round's plan underneath it, so (a)
-    // unpersisting the old labels makes the CacheManager lazily re-compile
-    // the dependent entry — clearing the data we just materialized — and
-    // (b) the final consumer replays every round's lineage (measured: a
-    // ~9s tail evaluating a 2.4k-row result). The checkpoint truncates the
-    // plan to the materialized rows — the standard iterative-algorithm
-    // discipline (GraphX does the same); on a multi-executor cluster the
-    // same call persists to local executor storage.
+    // Each round ends in an eager checkpoint, not a cache: a cached round
+    // still carries every earlier round's plan, which the final consumer
+    // replays (measured: a ~9 s tail on a 2.4k-row result)
     var labels = e.select(col("src").as("doc_id"))
       .distinct().withColumn("label", col("doc_id"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // §19 B1
     // Convergence by the MONOTONE-SUM invariant (round 17): hash-min
     // propagation is pointwise non-increasing — next.label =
     // min(own ∪ neighbors' labels) ≤ own label, over the same doc_id set
@@ -480,7 +460,7 @@ object TextOps {
     var rounds = 0
     try {
       while (!converged && rounds < maxRounds) {
-        val next = ccRound(e, labels).localCheckpoint(true)
+        val next = ccRound(e, labels).localCheckpoint(true) // §19 B2
         val nextSum = labelSum(next)
         converged = nextSum.compareTo(prevSum) == 0
         prevSum = nextSum
@@ -665,12 +645,10 @@ object TextOps {
         .groupBy("doc_id")
         .agg(expr("transform(sort_array(collect_list(struct(seed, mh))), t -> t.mh)")
           .as("sig"))
-        .localCheckpoint()
       val sets = hashedShingles(s, d).join(candDocs, Seq("doc_id"), "left_semi")
         .groupBy("doc_id")
         .agg(sort_array(collect_list(col("sh"))).as("st"),
           count(lit(1)).as("n"))
-        .localCheckpoint()
       // candidate pairs come from the materialize-once seam — the same
       // capped band join dedup_minhash scans (Derived.bandPairs), so the
       // band self-join is not re-derived here at all; this key pays only
@@ -803,7 +781,7 @@ object TextOps {
           explode(expr("sequence(1, length(t) - 4)")).as("i"))
         .select(col("doc_id"), expr(h60Spark("substring(t, i, 5)")).as("gram"))
         .distinct()
-        .localCheckpoint(true) // eager: 3 consumers (df-count, candDocs join, gc)
+        .localCheckpoint(true) // §19 C10: kept, measured slower without it
       // posting-list pair generation in TWO passes so no aggregation buffer
       // ever exceeds the df cap (round-2 verdict): pass 1 is a partial-agg
       // count that keeps only rare grams — a gram in 10M docs costs one
@@ -1147,12 +1125,11 @@ object TextOps {
         .select(col("doc_id"), col("lang"),
           coalesce(col("lang"), lit("<null>")).as("lk"),
           size(split(lower(col("text")), " ")).cast(L).as("n_tok"))
-      // EAGER checkpoint: repartitionByRange samples boundaries per job;
-      // the two consumers (offset collect + final join) must see the SAME
-      // partitioning (winNtile's observed ±1 flips otherwise)
+      // repartitionByRange samples its boundaries per job, so the offsets
+      // fold and the final join must read one frozen partitioning
       val ranged = toksz.repartitionByRange(parts, col("lk"), col("doc_id"))
         .withColumn("pid", spark_partition_id())
-        .localCheckpoint(true)
+        .localCheckpoint(true) // §19 A2
       val wLoc = Window.partitionBy("pid", "lk").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
       val local = ranged.withColumn("lb",
@@ -1822,8 +1799,6 @@ object TextOps {
       // is ONE row; all shares are double quotients of exact int64s.
       val wc = toks(s, d).select(explode(col("t")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("c"))
-        // 2 consumers (totals + head): count the vocab once
-        .localCheckpoint(true)
       val tot = wc.agg(count(lit(1)).as("n_vocab"), sum(col("c")).as("n_tokens"))
       // top-30 head via TakeOrderedAndProject (per-partition heaps, 30
       // rows to the driver side of the exchange — never a vocab-wide

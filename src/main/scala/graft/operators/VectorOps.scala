@@ -185,10 +185,7 @@ object VectorOps {
       // order). Reconstruction error is emitted per vector in exact
       // micro-units so the compression-quality audit is oracle-checkable.
       val e = pqSubvectors(s, d)
-      // round 17: the 16-row codebook is eagerly materialized — inlining
-      // it re-evaluated the whole seed→assign→update Lloyd subtree (a
-      // corpus-wide window pass) inside the outer assignment's plan
-      val cb = pqUpdate(pqAssign(e, pqSeed(e))).localCheckpoint(true)
+      val cb = pqUpdate(pqAssign(e, pqSeed(e)))
       pqAssign(e, cb)
         .groupBy("vec_id")
         .agg(
@@ -489,7 +486,7 @@ object VectorOps {
         .groupBy("vec_id")
         .agg(first(col("v")).as("v"), first(col("n")).as("n"),
           expr("sort_array(collect_list(sc))[0].c_id").as("cluster"))
-        .localCheckpoint(true) // consumed three times (a-side, b-side, verdict)
+        .localCheckpoint(true) // §19 C14: kept, the verdict branch re-derives it unless broadcast
       val a = assign.select(col("cluster"), col("vec_id").as("a"),
         col("v").as("av"), col("n").as("an"))
       val b = assign.select(col("cluster"), col("vec_id").as("b"),
@@ -761,7 +758,7 @@ object VectorOps {
       // association the oracle's list_sum uses, so every double matches
       // bit-for-bit; the oracle unrolls the identical three iterations
       // textually (the graph_pagerank precedent).
-      val e = emb(s, d).localCheckpoint(true) // 4 consumers: centroid + 3 scans
+      val e = emb(s, d)
       val dims = 64
       val mu: Array[Double] = e.select(posexplode(col("embedding")))
         .groupBy("pos")
@@ -1050,7 +1047,7 @@ object VectorOps {
         struct(lit(1L).as("band"),
           expr("s1 % CAST(shiftleft(1, wb) AS BIGINT)").as("bucket")))).as("bb"))
       .select(col("vec_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .localCheckpoint(true) // census + semi-join both scan it
+      .localCheckpoint(true) // §19 C16: kept, measured slower without it
     val cap = emb(s, d).agg(count(lit(1)).as("nv"))
       .select(expr(
         s"CAST(4 * ceil(nv / CAST(shiftleft(1, $bandBitsCase) AS DOUBLE)) AS BIGINT)")

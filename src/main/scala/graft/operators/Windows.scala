@@ -547,14 +547,11 @@ object Windows {
         .select(col("user_id"), date_trunc("week", col("first_ts")).as("cw"))
       val active = ev.select(col("user_id"), date_trunc("week", col("ts")).as("w"))
         .distinct()
-      // eager checkpoint: counts is consumed twice (rows + offset-0 base);
-      // without it the base branch re-derives the whole subtree — a second
-      // full pass over events. The table is |weeks|² rows — pennies.
       val counts = active.join(cohort, "user_id")
         .select(col("cw"), expr("datediff(w, cw) div 7").as("week_offset"))
         .groupBy("cw", "week_offset")
         .agg(count(lit(1)).as("n_users"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // §19 C12: kept, the base filter pushes down and re-joins events
       val base = counts.filter(col("week_offset") === 0)
         .select(col("cw"), col("n_users").as("base_users"))
       counts.join(broadcast(base), "cw")
@@ -849,7 +846,7 @@ object Windows {
     val parts = s.sparkContext.defaultParallelism
     val ranged = df.repartitionByRange(parts, order: _*)
       .withColumn(cPid, spark_partition_id())
-      .localCheckpoint(true)
+      .localCheckpoint(true) // §19 A1: freezes the sampled range boundaries (step 1)
     val wLoc = Window.partitionBy(cPid).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = ranged.withColumn(cLoc, sum(value).over(wLoc))

@@ -80,4 +80,32 @@ class GraftSessionSpec extends AnyFunSuite {
     // the write transaction and the migration ladder's own
     assert(count("setAutoCommit(false)") === 2)
   }
+
+  test("every localCheckpoint names its PERF.md §19 row within two lines") {
+    // a row id is its group letter (A: freezes range boundaries, B: cuts
+    // loop lineage, C: multi-consumer reuse) and a number; each row the
+    // code cites must exist in PERF.md §19 and say the site is kept
+    val perf = Files.readString(Paths.get("PERF.md"))
+    val section = perf.substring(perf.indexOf("\n## 19."))
+    val rowId = raw"§19 ([ABC]\d+)".r
+    val root = Paths.get("src/main/scala/graft")
+    val files = Seq("operators", "functions").flatMap { sub =>
+      val w = Files.walk(root.resolve(sub))
+      try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector finally w.close()
+    } :+ root.resolve("MutantQueries.scala")
+    val sites = for {
+      f <- files
+      lines = Files.readAllLines(f).asScala.toVector
+      (l, i) <- lines.zipWithIndex if l.contains(".localCheckpoint(")
+    } yield (s"${root.relativize(f)}:${i + 1}",
+      lines.slice(math.max(0, i - 2), i + 1).flatMap(x => rowId.findAllMatchIn(x).map(_.group(1))))
+    assert(sites.nonEmpty)
+    for ((at, ids) <- sites) {
+      assert(ids.nonEmpty, s"$at: localCheckpoint without a §19 row id in the two lines above")
+      for (id <- ids) {
+        val row = section.linesIterator.find(_.startsWith(s"| $id |"))
+        assert(row.exists(_.contains("kept")), s"$at cites §19 $id, which PERF.md does not list as kept")
+      }
+    }
+  }
 }

@@ -1099,4 +1099,28 @@ class PlanEvidenceSpec extends AnyFunSuite {
     } finally e.unpersist()
   }
 
+  test("keys without their checkpoints compute the shared subtree once (PERF.md §19)") {
+    // each key's formerly checkpointed frame has several consumers; the
+    // final plan must scan its input once and hand the other consumers a
+    // reused exchange, with and without size-based broadcasts (the second
+    // is the 100 TB shape)
+    val k = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(k)
+    def scans(p: String, name: String): Int =
+      p.linesIterator.count(l => l.contains("FileScan") && l.contains(name))
+    // rows C11, C8 and C9, C17 (edges and degrees, one copy of each)
+    val inputs = Seq(
+      "vocab_coverage" -> Seq("documents.parquet" -> 1),
+      "sim_minhash_est" -> Seq("minhash_sigs-" -> 1, "hashed_shingles-" -> 1),
+      "graph_pagerank" -> Seq("trade_edges-" -> 2))
+    for ((key, scanned) <- inputs; threshold <- Seq(prev, "-1")) {
+      spark.conf.set(k, threshold)
+      try {
+        val p = finalPlan(SparkEntry.queries(key)(spark, d)).split("== Initial Plan ==")(0)
+        assert(p.contains("ReusedExchange"), s"$key ($k=$threshold): no reused exchange\n$p")
+        for ((name, n) <- scanned)
+          assert(scans(p, name) === n, s"$key ($k=$threshold): $name scanned ${scans(p, name)} times\n$p")
+      } finally spark.conf.set(k, prev)
+    }
+  }
 }

@@ -1,13 +1,12 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.server.Server
 import graft.sources.{CatalogStore, DatasetRegistry, TableRegistry}
+import graft.TestSpark.jobsDuring
 
 /** The schema cache every table read goes through (`Tables.read`): one
   * inferred schema per (path, format, options) and file stamp. The saving
@@ -17,19 +16,6 @@ import graft.sources.{CatalogStore, DatasetRegistry, TableRegistry}
 class SchemaCacheSpec extends AnyFunSuite {
   val spark = TestSpark.spark
   val d = TestSpark.sfDir
-
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    org.apache.spark.GraftListenerDrain.drain(sc, 10000)
-    sc.addSparkListener(l)
-    try { body; org.apache.spark.GraftListenerDrain.drain(sc, 10000) }
-    finally sc.removeSparkListener(l)
-    n.get
-  }
 
   private def sql(q: String, dir: String) =
     Server.handle(spark, Server.ServeRequest("sql", q, dir))

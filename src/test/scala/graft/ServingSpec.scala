@@ -351,6 +351,17 @@ class ServingSpec extends AnyFunSuite {
     assert(sqlOut.contains("| n "))
   }
 
+  test("CLI text mode goes through the serving checks: maxRows past the ceiling is refused") {
+    val e = intercept[RuntimeException] {
+      Cli.run(spark, Cli.CliArgs("sql", "SELECT 1 AS one", d, json = false,
+        maxRows = Server.HardMaxRows + 1))
+    }
+    assert(e.getMessage.contains(s"maxRows must be <= ${Server.HardMaxRows}"))
+    assert(intercept[RuntimeException] {
+      Cli.run(spark, Cli.CliArgs("sql", "SELECT 1 AS one", d, json = false, maxRows = 0))
+    }.getMessage.contains("maxRows must be positive"))
+  }
+
   // ---- persistent catalog ----------------------------------------------
 
   /** The engine-portable catalog exercise — migrations already ran in

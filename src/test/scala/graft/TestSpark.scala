@@ -10,6 +10,21 @@ object TestSpark {
   lazy val spark: SparkSession = GraftSession.local("graft-test", cores)
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Spark jobs started on the shared session while `body` runs. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerDrain.drain(sc, 10000)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.GraftListenerDrain.drain(sc, 10000) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
   /** A private copy of the fixture dir, for specs that rewrite its tables. */
   def fixtureCopy(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
