@@ -21,6 +21,9 @@ import org.apache.spark.sql.SparkSession
   *    `transformWithState` needs but Spark only opens with the context's
   *    first `StreamingQueryManager`
   *  - log level WARN
+  *  - `request(s)`: the one way a served request gets its session, a
+  *    `newSession()` of `s` that runs its tasks under the executor's
+  *    shared class loader, so a repeated read hits the codegen cache
   */
 object GraftSession {
 
@@ -35,6 +38,21 @@ object GraftSession {
     */
   private[graft] def local(appName: String, cores: Int): SparkSession =
     build(appName, s"local[$cores]", cores)
+
+  /** A request session of `s`: its own temp views, SQL confs and job
+    * group, but no artifact isolation. Spark keys its codegen cache by
+    * (class loader, source text), and an isolated session runs its tasks
+    * under a class loader of its own, so every task-side class of an
+    * exact repeat would compile again. The session's `ArtifactManager`
+    * reads the flag lazily, so setting it before the first query holds.
+    * Nothing in graft adds session artifacts (`GraftSessionSpec` scans
+    * for it), so there is nothing to isolate.
+    */
+  def request(s: SparkSession): SparkSession = {
+    val sess = s.newSession()
+    sess.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    sess
+  }
 
   private def build(appName: String, master: String, cores: Int): SparkSession = {
     val s = SparkSession.builder()

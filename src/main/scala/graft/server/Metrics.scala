@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Process-lifetime serving metrics (round 16 — the observability leg a
   * deployed query server needs on day one: "is it up" is /health, "what
@@ -21,6 +22,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * processes by addition, and the decade bounds (10 ms..10 s) bracket
   * the serving timeout's practical range. O(dialects × buckets) memory,
   * ~constant.
+  *
+  * The snapshot also carries the process's Janino compile count, read
+  * from Spark's own codegen metric (no job, no listener).
   *
   * GET /metrics serves the snapshot; it authenticates like the data
   * routes (usage patterns are information), unlike the liveness-only
@@ -81,6 +85,10 @@ object Metrics {
         b.put(bn, adder.sum())
       }
     }
+    // process-wide Janino compiles (driver and tasks): a served read that
+    // repeats an earlier one adds none
+    out.putObject("codegen")
+      .put("compiles", CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
     mapper.writeValueAsString(out)
   }
 

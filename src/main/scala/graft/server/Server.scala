@@ -9,6 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, to_json}
 
+import graft.GraftSession
 import graft.dialects.{GraphQL, NlToSql}
 import graft.sources.{CatalogStore, DatasetRegistry, JdbcCatalog, TableRegistry}
 
@@ -50,9 +51,12 @@ object Server {
   /** Route one request through the matching dialect front-end. Returns the
     * (lazy, distributed) DataFrame — callers choose how to consume it.
     *
-    * Isolation: each request runs in `s.newSession()` — same
-    * SparkContext, shared cache, but a PRIVATE temp-view catalog.
-    * Without it, two pooled requests with different `dir`s race on the
+    * Isolation: each request runs in its own session of `s`, built by
+    * `GraftSession.request`. Per request: temp views, SQL confs and the
+    * job group. Shared with every other request: the SparkContext, the
+    * executor class loader, the codegen cache and cached data, so an
+    * exact repeat of a read compiles no class again. Without private
+    * views, two pooled requests with different `dir`s race on the
     * session-global view names (`orders`, `lineitem`, …): one request's
     * registration re-points the views mid-analysis of the other, which
     * then silently reads the wrong directory's data. A SQL or NL request
@@ -72,10 +76,10 @@ object Server {
     * params loudly rather than ignore them.
     */
   def handle(s: SparkSession, req: ServeRequest): DataFrame =
-    handleIn(s, s.newSession(), req)
+    handleIn(s, GraftSession.request(s), req)
 
   /** [[handle]] inside a request session the caller owns (`sess`, a
-    * `newSession()` of `s`), so the caller can release its views.
+    * `GraftSession.request(s)`), so the caller can release its views.
     */
   private def handleIn(s: SparkSession, sess: SparkSession, req: ServeRequest): DataFrame = {
     // cross-process coherence (round 17): observe peer replicas' metadata
@@ -235,13 +239,14 @@ object Server {
     * {"error": "..."}.
     */
   def handleJson(s: SparkSession, body: String): String =
-    handleJson(s, s.newSession(), body)
+    handleJson(s, GraftSession.request(s), body)
 
-  /** [[handleJson]] in the request session `sess` (a `newSession()` of
-    * `s`). The session outlives the request: AQE pool threads started by
-    * its queries inherit it as their active session until they idle out.
-    * So its temp views (one relation per named table) are dropped once the
-    * response is rendered; `s`'s own views are never touched.
+  /** [[handleJson]] in the request session `sess` (a
+    * `GraftSession.request(s)`). The session outlives the request: AQE
+    * pool threads started by its queries inherit it as their active
+    * session until they idle out. So its temp views (one relation per
+    * named table) are dropped once the response is rendered; `s`'s own
+    * views are never touched.
     */
   private[graft] def handleJson(s: SparkSession, sess: SparkSession, body: String): String = {
     // metering wraps the WHOLE request (parse + translate + execute +

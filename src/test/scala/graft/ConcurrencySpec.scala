@@ -14,7 +14,7 @@ import graft.server.Server
 import graft.sources.{CatalogStore, DatasetRegistry, JdbcCatalog, TableRegistry}
 
 /** Concurrent-serving soak (round-13 verdict item 5): `Server.handle`
-  * isolates requests via `newSession()` and `DatasetRegistry` is
+  * isolates requests via `GraftSession.request` and `DatasetRegistry` is
   * synchronized, but every prior spec exercised the HTTP API
   * SEQUENTIALLY. This suite hammers one HttpApi with N client threads ×
   * mixed dialects × interleaved catalog register/unregister and asserts
@@ -22,8 +22,8 @@ import graft.sources.{CatalogStore, DatasetRegistry, JdbcCatalog, TableRegistry}
   *
   *  1. per-request ROW IDENTITY — each thread's parametrized query gets
   *     ITS OWN answer back (a cross-request session leak — the
-  *     registerAll temp-view race handle()'s newSession exists to
-  *     prevent — would swap results between threads);
+  *     registerAll temp-view race handle()'s request session exists
+  *     to prevent — would swap results between threads);
   *  2. catalog consistency — after interleaved register/unregister
   *     churn against concurrent readers, the registry and the durable
   *     store agree and hold exactly the expected final entries.

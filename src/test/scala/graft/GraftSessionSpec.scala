@@ -53,6 +53,26 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(sourcesContaining("SparkSession.builder") === Seq("graft/GraftSession.scala"))
   }
 
+  test("request sessions come only from GraftSession, and nothing adds session artifacts") {
+    assert(sourcesContaining("newSession()") === Seq("graft/GraftSession.scala"))
+    // request sessions share the executor class loader, so an artifact
+    // one request added would be seen by every other
+    for (needle <- Seq("addArtifact", "addJar", "ADD JAR"))
+      assert(sourcesContaining(needle).isEmpty, needle)
+  }
+
+  test("a request session shares the executor class loader but keeps its own views and confs") {
+    val sess = GraftSession.request(spark)
+    assert(sess ne spark)
+    assert(sess.conf.get("spark.sql.artifact.isolation.enabled") === "false")
+    sess.range(1).createOrReplaceTempView("request_only_view")
+    sess.conf.set("spark.sql.shuffle.partitions", "3")
+    try {
+      assert(!spark.catalog.tableExists("request_only_view"))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === TestSpark.cores.toString)
+    } finally sess.sessionState.catalog.clearTempTables()
+  }
+
   test("no other code sets the state store or the extensions, or registers functions") {
     for (needle <- Seq("stateStore.providerClass", "spark.sql.extensions"))
       assert(sourcesContaining(needle) === Seq("graft/GraftSession.scala"), needle)

@@ -142,10 +142,12 @@ class ServingSpec extends AnyFunSuite {
 
   test("a runaway query is cancelled at the serving timeout, loudly") {
     // NlGate blocks commands, not expensive SELECTs: this theta self-join
-    // (~36M comparisons at fixture scale) runs far past a 300ms budget;
-    // the watchdog must cancel its job group and the client must get a
-    // loud, actionable error — not a hung pool thread
-    Server.timeoutOverrideMs = Some(300L)
+    // (~36M comparisons at fixture scale, ~350ms warm and uncancelled on
+    // 4 vCPUs) runs over ten times a 25ms budget; the watchdog must cancel
+    // its job group and the client must get a loud, actionable error — not
+    // a hung pool thread. A deadline that fires before the first job
+    // cancels the jobs the query starts later.
+    Server.timeoutOverrideMs = Some(25L)
     try {
       val resp = mapper.readTree(Server.handleJson(spark,
         s"""{"dialect":"sql","query":"SELECT count(*) AS n FROM lineitem a JOIN lineitem b ON a.l_quantity >= b.l_quantity","dir":"$d"}"""))
@@ -751,9 +753,9 @@ class ServingSpec extends AnyFunSuite {
   // ---- per-request isolation + serving hardening ------------------------
 
   test("concurrent requests with different dirs each read their own data") {
-    // each request runs in s.newSession() with a private temp-view
-    // catalog; without it two pooled requests race on the shared view
-    // names and one silently counts the other's directory
+    // each request runs in GraftSession.request(s) with a private
+    // temp-view catalog; without it two pooled requests race on the
+    // shared view names and one silently counts the other's directory
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -1115,10 +1117,10 @@ class ServingSpec extends AnyFunSuite {
       post(s"""{"dialect":"nl","dir":"$d","query":"how many rows are in nation"}""")
       post(s"""{"dialect":"made_up","dir":"$d","query":"x"}""") // → other
       post("not json at all")                                   // → invalid
-      val req = HttpRequest.newBuilder(URI.create(s"http://localhost:$p/metrics"))
-        .GET().build()
-      val m = mapper.readTree(
-        client.send(req, HttpResponse.BodyHandlers.ofString()).body())
+      def metrics() = mapper.readTree(client.send(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:$p/metrics")).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).body())
+      val m = metrics()
       assert(m.get("uptime_s").asLong >= 0)
       val sql = m.get("dialects").get("sql")
       assert(sql.get("requests").asLong === 3, m.toString)
@@ -1137,6 +1139,14 @@ class ServingSpec extends AnyFunSuite {
       assert(m.get("dialects").get("other").get("errors").asLong === 1)
       assert(m.get("dialects").get("invalid").get("requests").asLong === 1)
       assert(!m.get("dialects").has("made_up"), m.toString)
+      // the process's Janino compile count, which an exact repeat of a
+      // served read leaves where it was
+      assert(m.get("codegen").get("compiles").asLong >= 0, m.toString)
+      val read = s"""{"dialect":"sql","dir":"$d","query":"SELECT o_orderstatus, count(*) AS n FROM orders GROUP BY o_orderstatus"}"""
+      assert(!post(read).contains("\"error\""))
+      val warm = metrics().get("codegen").get("compiles").asLong
+      assert(!post(read).contains("\"error\""))
+      assert(metrics().get("codegen").get("compiles").asLong === warm)
     } finally { api.stop(); Metrics.reset() }
   }
 
