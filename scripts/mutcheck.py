@@ -1,18 +1,22 @@
 #!/usr/bin/env python3
 """Gate-sensitivity (mutation) audit.
 
-Runs graft.MutantVerify — deliberately-broken variants of ~20 representative
-SparkEntry.queries keys (MutantQueries.scala: boundary off-by-ones, window
-frame off-by-ones, dropped tie-breaks, swapped NULL ordering, truncated dim
-loops, wrong denominators, dropped dedup keys) — against the fixture that
-makes each defect observable (clean sf0.001, or an EdgeFixtures hostile
-variant), then runs the UNCHANGED scripts/check.py compare and requires it
-to FAIL every mutant. A mutant the gate passes ("survived") is a proven
-blind spot: the oracle mirrors the bug or the fixture lacks the triggering
-shape. Writes MUTCHECK.json.
+Runs graft.MutantVerify over every MutantQueries entry: planted entries
+(the key itself, with graft.plans.Mutate making one plan edit: a boundary
+comparison, a frame bound, a tie-break, a NULL ordering, a dropped
+distinct/dedup key or conjunct, a limit/offset) and hand-written mutants
+(a copy of the key with a wrong constant, formula, join type, ...), each
+against the fixture that makes its defect observable (clean sf0.01, or an
+EdgeFixtures hostile variant). Then runs the UNCHANGED scripts/check.py
+compare and requires it to FAIL every mutant. A mutant the gate passes
+("survived") is a proven blind spot: the oracle mirrors the bug or the
+fixture lacks the triggering shape. The entries come from the manifest
+MutantVerify writes (target/mutout/mutants.json); a planted entry's
+MUTCHECK.json record carries each planted edit as "Node: before -> after".
+Writes MUTCHECK.json.
 
 Usage: python3 scripts/mutcheck.py [--skip-gen]
-  --skip-gen  reuse target/edgedata variants (else regenerates them)
+  --skip-gen  reuse target/edgedata01 variants (else regenerates them)
 """
 import json
 import os
@@ -31,20 +35,6 @@ CLEAN = "/root/testdata/sf0.01"
 EDGE = REPO / "target" / "edgedata01"
 OUT = REPO / "target" / "mutout"
 
-# fixture -> mutant keys, kept in sync with MutantQueries.scala by the
-# harness itself: MutantVerify prints nothing structured, so the grouping
-# is re-parsed from the Scala source (single source of truth).
-def mutant_fixtures():
-    src = (REPO / "src/main/scala/graft/MutantQueries.scala").read_text()
-    import re
-    groups = {}
-    # Mutant("key", "class", "desc", "fixture", ...) — desc may span lines
-    for m in re.finditer(
-            r'Mutant\("([^"]+)",\s*"([^"]+)",\s*"[^"]*",\s*"(\w+)"', src):
-        key, clazz, fixture = m.group(1), m.group(2), m.group(3)
-        groups.setdefault(fixture, []).append((key, clazz))
-    return groups
-
 
 def sh(args):
     e = dict(os.environ)
@@ -55,52 +45,45 @@ def sh(args):
 
 
 def main():
-    skip_gen = "--skip-gen" in sys.argv
-    groups = mutant_fixtures()
-    need_edge = [f for f in groups if f != "clean"]
-    if need_edge and not skip_gen:
-        missing = [f for f in need_edge if not (EDGE / f).is_dir()]
-        if missing:
-            print(f"[mutcheck] generating edge variants ({missing}) ...",
-                  flush=True)
-            r = sh(["scripts/run.sh", "graft.EdgeFixtures", CLEAN, str(EDGE)])
-            if r.returncode != 0:
-                print(r.stderr[-3000:])
-                sys.exit(2)
+    if not ("--skip-gen" in sys.argv and EDGE.is_dir()):
+        print("[mutcheck] generating edge variants ...", flush=True)
+        r = sh(["scripts/run.sh", "graft.EdgeFixtures", CLEAN, str(EDGE)])
+        if r.returncode != 0:
+            print(r.stderr[-3000:])
+            sys.exit(2)
+    r = sh(["scripts/run.sh", "graft.MutantVerify", CLEAN, str(EDGE), str(OUT)])
+    if r.returncode != 0:
+        print(r.stdout[-2000:])
+        print(r.stderr[-2000:])
+        sys.exit(2)
+    groups = {}
+    for m in json.loads((OUT / "mutants.json").read_text()):
+        groups.setdefault(m["fixture"], []).append(m)
 
     report = {"mutants": {}, "survived": []}
-    for fixture, keys in sorted(groups.items()):
+    for fixture, ms in sorted(groups.items()):
         fdir = CLEAN if fixture == "clean" else str(EDGE / fixture)
-        odir = OUT / fixture
-        knames = [k for k, _ in keys]
-        print(f"[mutcheck] {fixture}: {knames}", flush=True)
-        r = sh(["scripts/run.sh", "graft.MutantVerify", fdir, str(odir)]
-               + knames)
-        if r.returncode != 0:
-            print(r.stdout[-2000:])
-            print(r.stderr[-2000:])
-            sys.exit(2)
-        # results are keyed (key, class): a key may carry several planted
-        # defects, and key-only output dirs would overwrite (round 10)
-        mnames = [f"{k}__{c}" for k, c in keys]
-        res = run_check(fdir, str(odir), mnames)
-        for key, clazz in keys:
-            info = res.get(f"{key}__{clazz}",
-                           {"status": "missing", "msg": "no result"})
-            # 'missing' means the mutant crashed before writing output
-            # (MutantVerify swallows the exception) — that is an infra
-            # failure, NOT gate sensitivity: a kill requires the mutant to
-            # have produced output the unchanged compare REJECTED
-            # (round-9 ADVICE; 'missing' used to be credited as killed)
+        print(f"[mutcheck] {fixture}: {[m['name'] for m in ms]}", flush=True)
+        # results are keyed by output name, "<key>__<class>": a key may
+        # carry several defects
+        res = run_check(fdir, str(OUT / fixture), [m["name"] for m in ms])
+        for m in ms:
+            key, clazz = m["key"], m["class"]
+            info = res.get(m["name"], {"status": "missing", "msg": "no result"})
+            # 'missing' means the mutant crashed, or its rule planted
+            # nothing, before writing output — an infra failure, NOT gate
+            # sensitivity: a kill requires the mutant to have produced
+            # output the unchanged compare REJECTED
             status = "did-not-run" if info["status"] == "missing" \
                 else info["status"]
             killed = status in ("fail", "error")
-            report["mutants"][f"{key}:{clazz}"] = {
-                "class": clazz, "fixture": fixture,
-                "gate": status,
-                "killed": killed,
-                "msg": (info.get("msg") or "")[:200],
-            }
+            rec = {"class": clazz, "fixture": fixture,
+                   "gate": status,
+                   "killed": killed,
+                   "msg": (info.get("msg") or "")[:200]}
+            if "op" in m:
+                rec.update(op=m["op"], site=m["site"], planted=m["planted"])
+            report["mutants"][f"{key}:{clazz}"] = rec
             if status == "did-not-run":
                 report.setdefault("did_not_run", []).append(f"{key}:{clazz}")
             elif not killed:

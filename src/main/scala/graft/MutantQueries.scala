@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.plans.Mutate
+import java.nio.file.{Files, Paths}
 
 /** Gate-sensitivity (mutation) audit registry — scripts/mutcheck.py.
   *
@@ -14,158 +16,92 @@ import graft.Tables._
   * exercises the behavior a formula encodes, passes green while wrong
   * (the round-7 vec_pq 16-of-64-dims bug is the canonical example — found
   * by review, not by the gate). The reference itself signals
-  * mutation-testing intent (cargo-mutants in /root/reference/.gitignore:12-14);
-  * this is that idea applied to the gate instead of the code.
+  * mutation-testing intent (cargo-mutants in its .gitignore); this is that
+  * idea applied to the gate instead of the code.
   *
-  * Each entry below is a DELIBERATELY WRONG variant of a real
-  * `SparkEntry.queries` key — same name, same output schema, one planted
-  * defect from a named defect class (boundary off-by-one, window-frame
-  * off-by-one, dropped tie-break, swapped NULL ordering, truncated dim
-  * loop, wrong denominator, dropped dedup key, …). `graft.MutantVerify`
-  * writes their results exactly like Verify; `scripts/mutcheck.py` then
-  * runs the UNCHANGED oracle compare and requires it to FAIL every
-  * mutant. A surviving mutant means the gate cannot see that defect class
-  * on that fixture — either the oracle re-derives nothing (it mirrors),
-  * or the fixture lacks the triggering data shape (which is why several
-  * mutants run against the hostile EdgeFixtures variants: `nulls` for
-  * NULL-path mutants, `ties` for boundary/tie-break mutants, `dupkeys`
-  * for duplicate-sensitive ones).
+  * Each entry is a DELIBERATELY WRONG variant of a real `SparkEntry.queries`
+  * key, with one defect from a named defect class, run on the fixture that
+  * makes the defect observable: `clean`, or a hostile EdgeFixtures variant
+  * (`nulls` for NULL-path defects, `ties` for boundary/tie-break ones,
+  * `dupkeys` for duplicate-sensitive ones). `graft.MutantVerify` writes
+  * their results exactly like Verify; `scripts/mutcheck.py` then runs the
+  * UNCHANGED oracle compare and requires it to FAIL every entry. A
+  * survivor means the gate cannot see that defect class on that fixture.
+  *
+  * Two kinds of entry:
+  *  - [[Planted]]: the key itself, unchanged, with `graft.plans.Mutate(op,
+  *    site)` making one mechanical edit to the plan its result is written
+  *    from. Construction (eager jobs, checkpoints, `Derived` builds) runs
+  *    unmutated. Operator → defect class:
+  *
+  *    - `cmp`: `<` ↔ `<=` or `>` ↔ `>=` on one comparison (boundary)
+  *    - `frame`: one literal window-frame bound one step inward, lower +1
+  *      or upper −1, a ROWS frame's CURRENT ROW counting as 0
+  *      (frame-off-by-one)
+  *    - `tiebreak`: reverse the last key of a Sort or window ORDER BY with
+  *      ≥ 2 keys, the deterministic face of a dropped tie-break
+  *      (wrong-tiebreak)
+  *    - `nulls`: flip NULLS FIRST/LAST on one Sort key (null-ordering)
+  *    - `dedup`: drop a DISTINCT aggregate's distinct, an aggregate-free
+  *      GROUP BY (a distinct), or one window PARTITION BY key
+  *      (dropped-distinct, dropped-dedup-key)
+  *    - `conjunct`: drop one conjunct of a Filter or Join condition
+  *      (dropped-join-key, dropped-pushed-filter)
+  *    - `limit`: one LIMIT or OFFSET literal +1 (limit-off-by-one,
+  *      offset-off-by-one)
+  *
+  *  - [[Mutant]]: a hand-written copy of the key with the defect in its
+  *    code (`// BUG`), for defects those operators do not express: a wrong
+  *    constant, formula, join type or window width, or a defect inside a
+  *    `Derived` build, which construction runs unmutated.
   */
 object MutantQueries {
 
-  /** fixture ∈ clean | nulls | ties | dupkeys — which fixture makes the
-    * planted defect observable (clean data almost never has sort-key ties
-    * or boundary-exact values; that is the point of the variants).
-    */
-  final case class Mutant(
-      key: String,
-      clazz: String,
-      desc: String,
-      fixture: String,
-      fn: (SparkSession, String) => DataFrame)
+  /** `clazz` is the defect class; `fixture` is clean, nulls, ties or dupkeys. */
+  sealed trait Entry {
+    def key: String
+    def clazz: String
+    def fixture: String
+    /** Collision-free output name: a key may carry one entry per class. */
+    def outName: String = s"${key}__$clazz"
+  }
 
-  /** Collision-free per-mutant output name: a key may carry several
-    * planted defects (one per class).
-    */
-  def outName(m: Mutant): String = s"${m.key}__${m.clazz}"
+  final case class Mutant(key: String, clazz: String, desc: String, fixture: String,
+                          fn: (SparkSession, String) => DataFrame) extends Entry
+
+  final case class Planted(key: String, clazz: String, fixture: String, op: String, site: Int)
+      extends Entry
+
+  /** Sites are indices into `graft.plans.Mutate.sites(op, plan)`. */
+  val planted: Seq[Planted] = Seq(
+    Planted("agg_group_multi", "boundary", "ties", "cmp", 0),
+    Planted("join_theta", "boundary", "ties", "cmp", 1),
+    // an equal-ts purchase sorts after the click: the as-of bound made exclusive
+    Planted("join_asof", "boundary", "ties", "tiebreak", 0),
+    Planted("gql_filter_ops", "exclusive-between", "ties", "cmp", 0),
+    Planted("filter_between", "boundary", "clean", "cmp", 1),
+    Planted("agg_filtered", "boundary", "ties", "cmp", 0),
+    Planted("q_waiting_suppliers", "boundary", "clean", "cmp", 0),
+    Planted("market_basket", "boundary", "clean", "cmp", 0),
+    Planted("split_assign", "boundary", "clean", "cmp", 0),
+    Planted("win_running_sum", "frame-off-by-one", "clean", "frame", 0),
+    Planted("win_moving_avg", "frame-off-by-one", "clean", "frame", 0),
+    Planted("win_range_frame", "frame-off-by-one", "ties", "frame", 0),
+    Planted("win_topk_group", "wrong-tiebreak", "ties", "tiebreak", 1),
+    Planted("agg_mode", "wrong-tiebreak", "dupkeys", "tiebreak", 0),
+    Planted("sort_multi", "null-ordering", "nulls", "nulls", 1),
+    Planted("join_full", "null-ordering", "clean", "nulls", 0),
+    Planted("agg_count_distinct", "dropped-distinct", "dupkeys", "dedup", 0),
+    Planted("distinct", "dropped-distinct", "dupkeys", "dedup", 0),
+    Planted("stream_dedup", "dropped-dedup-key", "clean", "dedup", 1),
+    Planted("join_multikey", "dropped-join-key", "clean", "conjunct", 1),
+    Planted("gql_catalog_agg", "dropped-pushed-filter", "clean", "conjunct", 2),
+    Planted("topk", "limit-off-by-one", "clean", "limit", 0),
+    Planted("sim_ivf_pq", "limit-off-by-one", "clean", "cmp", 0),
+    Planted("offset", "offset-off-by-one", "clean", "limit", 1),
+    Planted("gql_paginate", "offset-off-by-one", "clean", "limit", 1))
 
   val mutants: Seq[Mutant] = Seq(
-
-    Mutant("agg_group_multi", "boundary",
-      "flagship date filter < instead of <= (inclusive-bound off-by-one)",
-      "ties", (s, d) => {
-        val disc1 = lit(1).cast(Money) - dec(col("l_discount"))
-        val small = DecimalType(6, 4)
-        val disc1n = lit(1).cast(small) - col("l_discount").cast(small)
-        val tax1n = lit(1).cast(small) + col("l_tax").cast(small)
-        val factor = (disc1n * tax1n).cast(DecimalType(9, 8))
-        lineitem(s, d)
-          .filter(col("l_shipdate") < lit("1998-09-02").cast(TimestampType)) // BUG
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(
-            outDec(sum(dec(col("l_quantity")))).as("sum_qty"),
-            outDec(sum(dec(col("l_extendedprice")))).as("sum_base_price"),
-            outDec(sum(dec(col("l_extendedprice")) * disc1)).as("sum_disc_price"),
-            outDec(sum(dec(col("l_extendedprice")) * factor)).as("sum_charge"),
-            r4(sum(dec(col("l_quantity"))).cast(DoubleType) / count(lit(1))).as("avg_qty"),
-            count(lit(1)).as("count_order"))
-          .orderBy("l_returnflag", "l_linestatus")
-      }),
-
-    Mutant("win_running_sum", "frame-off-by-one",
-      "running total frame ends at -1 PRECEDING instead of CURRENT ROW",
-      "clean", (s, d) =>
-        orders(s, d)
-          .select(col("o_orderkey"), col("o_custkey"),
-            outDec(sum(dec(col("o_totalprice")))
-              .over(Window.partitionBy("o_custkey")
-                .orderBy(col("o_orderdate"), col("o_orderkey"))
-                .rowsBetween(Window.unboundedPreceding, -1))) // BUG
-              .as("run_total"))
-          .orderBy("o_orderkey")),
-
-    Mutant("win_moving_avg", "frame-off-by-one",
-      "moving average over 3 rows instead of 4 (frame -2..0 not -3..0)",
-      "clean", (s, d) => {
-        val w = Window.partitionBy("l_suppkey")
-          .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-          .rowsBetween(-2, 0) // BUG
-        lineitem(s, d)
-          .select(col("l_orderkey"), col("l_linenumber"),
-            r4(sum(dec(col("l_quantity"))).over(w).cast(DoubleType) /
-              count(lit(1)).over(w)).as("mavg_qty"))
-          .orderBy("l_orderkey", "l_linenumber", "mavg_qty")
-      }),
-
-    // NOTE: desc must be ONE string literal — mutcheck.py re-parses this
-    // registry with a regex keyed on the 4 leading literals
-    Mutant("win_topk_group", "wrong-tiebreak",
-      "top-3 rank tie-break reversed (deterministic face of a dropped tie-break)",
-      "ties", (s, d) => {
-        val w = Window.partitionBy("o_custkey")
-          .orderBy(col("o_totalprice").desc_nulls_last,
-            col("o_orderkey").desc) // BUG: reversed tie-break
-        orders(s, d)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-          .orderBy("o_custkey", "rn")
-      }),
-
-    Mutant("topk", "limit-off-by-one",
-      "top-10 emits 11 rows",
-      "clean", (s, d) =>
-        orders(s, d).select("o_orderkey", "o_totalprice")
-          .orderBy(col("o_totalprice").desc_nulls_last, col("o_orderkey"))
-          .limit(11)), // BUG
-
-    Mutant("sort_multi", "null-ordering",
-      "secondary sort key NULLS LAST instead of Spark-default NULLS FIRST",
-      "nulls", (s, d) =>
-        customer(s, d)
-          .select("c_custkey", "c_mktsegment", "c_acctbal")
-          .orderBy(col("c_mktsegment").desc_nulls_last,
-            col("c_acctbal").asc_nulls_last, // BUG
-            col("c_custkey"))),
-
-    Mutant("join_asof", "boundary",
-      "as-of bound exclusive: equal-ts purchase sorts AFTER the click",
-      "ties", (s, d) => {
-        val ev = events(s, d)
-          .filter(col("event_type").isin("click", "purchase"))
-          .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-            when(col("event_type") === "purchase", col("ts")).as("p_ts"))
-        val kind = when(col("event_type") === "purchase", 2).otherwise(1) // BUG
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), kind)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ev.withColumn("last_purchase_ts",
-            when(col("user_id").isNotNull,
-              last(col("p_ts"), ignoreNulls = true).over(w)))
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"), col("last_purchase_ts"))
-          .orderBy("event_id")
-      }),
-
-    Mutant("join_theta", "boundary",
-      "theta upper bound < instead of <=",
-      "ties", (s, d) =>
-        customer(s, d).join(supplier(s, d),
-            col("s_acctbal") < col("c_acctbal") &&
-            col("c_acctbal") < col("s_acctbal") + 500) // BUG
-          .select("c_custkey", "s_suppkey", "c_acctbal", "s_acctbal")
-          .orderBy("c_custkey", "s_suppkey")),
-
-    Mutant("join_full", "null-ordering",
-      "full-join output sorted NULLS LAST instead of NULLS FIRST",
-      "clean", (s, d) => {
-        val big = orders(s, d).groupBy("o_custkey").agg(count(lit(1)).as("n_orders"))
-          .filter(col("n_orders") >= 12)
-        val rich = customer(s, d).filter(col("c_acctbal") > 8000)
-          .select("c_custkey", "c_acctbal")
-        big.join(rich, col("o_custkey") === col("c_custkey"), "full")
-          .select("o_custkey", "n_orders", "c_custkey", "c_acctbal")
-          .orderBy(col("o_custkey").asc_nulls_last, col("c_custkey").asc_nulls_last) // BUG
-      }),
 
     Mutant("join_semi", "join-type",
       "left-semi replaced by inner + project (fan-out on multi-match)",
@@ -202,20 +138,6 @@ object MutantQueries {
           .orderBy("o_orderstatus")
       }),
 
-    Mutant("agg_mode", "wrong-tiebreak",
-      "mode tie-break reversed (deterministic face of a dropped tie-break)",
-      "dupkeys", (s, d) => {
-        val w = Window.partitionBy("o_orderstatus")
-          .orderBy(col("cnt").desc, col("o_orderpriority").desc) // BUG: reversed
-        orders(s, d).groupBy("o_orderstatus", "o_orderpriority")
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("o_orderstatus"), col("o_orderpriority").as("mode_priority"),
-            col("cnt").as("mode_count"))
-          .orderBy("o_orderstatus")
-      }),
-
     Mutant("agg_entropy", "wrong-total",
       "entropy normalizes by count(*) instead of the sum of typed counts",
       "nulls", (s, d) => {
@@ -247,17 +169,6 @@ object MutantQueries {
           .orderBy("l_orderkey", "l_linenumber", "surrogate_key")
       }),
 
-    Mutant("stream_dedup", "dropped-dedup-key",
-      "stateful dedup keyed by user only (event_type dropped)",
-      "clean", (s, d) => {
-        val w = Window.partitionBy("user_id") // BUG: event_type dropped
-          .orderBy(col("ts"), col("event_id"))
-        events(s, d).withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select("user_id", "event_type", "event_id", "ts")
-          .orderBy("user_id", "event_type")
-      }),
-
     Mutant("stream_tumbling", "window-width",
       "tumbling window 6 minutes instead of 5",
       "clean", (s, d) =>
@@ -267,17 +178,6 @@ object MutantQueries {
           .select(col("window.start").as("w_start"), col("event_type"),
             col("cnt"), col("sum_val"))
           .orderBy("w_start", "event_type")),
-
-    Mutant("win_range_frame", "frame-off-by-one",
-      "range frame lower bound -299s instead of -300s",
-      "ties", (s, d) => {
-        val ev = events(s, d).withColumn("es", expr("unix_micros(ts) div 1000000"))
-        val w = Window.partitionBy("event_type").orderBy(col("es"))
-          .rangeBetween(-299, 0) // BUG
-        ev.select(col("event_id"), col("event_type"), col("es"),
-            outDec(sum(dec(col("value"))).over(w)).as("sum_5min"))
-          .orderBy("event_id")
-      }),
 
     Mutant("graph_pagerank", "wrong-constant",
       "damping 0.80 instead of 0.85",
@@ -340,24 +240,8 @@ object MutantQueries {
           .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
           .orderBy("content_hash")),
 
-    // ------------------------------------------------------------------
-    // round 9: one planted defect per (defect class × module) cell the 21
-    // originals left uncovered — Dialects, DataQuality, Composites-level
-    // analytics, GraphOps, remaining streaming/window/join/agg/text/vector
-    // shapes, prioritizing keys whose oracles re-derive complex
-    // formulations (BFS, kmeans, IVF, band joins).
-    // ------------------------------------------------------------------
-
-    Mutant("join_multikey", "dropped-join-key",
-      "two-key dim join matches on partkey only (suppkey dropped, fan-out)",
-      "clean", (s, d) => {
-        val li = lineitem(s, d)
-        val dim = li.groupBy(col("l_partkey").as("d_partkey"), col("l_suppkey").as("d_suppkey"))
-          .agg(min(col("l_extendedprice")).as("min_price"))
-        li.join(dim, col("l_partkey") === col("d_partkey")) // BUG
-          .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "min_price")
-          .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-      }),
+    // round 9: one hand mutant per (defect class × module) cell still
+    // uncovered, favouring keys whose oracles re-derive complex formulations
 
     Mutant("join_anti", "join-type",
       "left-anti replaced by left-semi (complement set emitted)",
@@ -395,16 +279,6 @@ object MutantQueries {
           .orderBy(col("g_status"), col("g_prio"),
             col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)),
 
-    Mutant("agg_filtered", "boundary",
-      "discount filter >= 0.05 instead of > (grid-occupied boundary)",
-      "ties", (s, d) =>
-        lineitem(s, d).groupBy("l_returnflag")
-          .agg(
-            outDec(sum(when(col("l_discount") >= 0.05, dec(col("l_quantity"))))) // BUG
-              .as("qty_hi_disc"),
-            count(when(col("l_quantity") > 25, lit(1))).as("n_bulk"))
-          .orderBy("l_returnflag")),
-
     Mutant("agg_stats", "wrong-denominator",
       "population stddev/variance instead of sample",
       "clean", (s, d) =>
@@ -416,13 +290,6 @@ object MutantQueries {
             (r4(covar_samp(col("l_quantity"), col("l_extendedprice"))) + lit(0.0)).as("cov_qp"))
           .orderBy("l_returnflag")),
 
-    Mutant("agg_count_distinct", "dropped-distinct",
-      "count(col) instead of count(DISTINCT col)",
-      "dupkeys", (s, d) =>
-        orders(s, d).groupBy("o_orderstatus")
-          .agg(count(col("o_custkey")).as("n_cust")) // BUG
-          .orderBy("o_orderstatus")),
-
     Mutant("agg_histogram", "wrong-constant",
       "bin width 24000 instead of 25000",
       "clean", (s, d) =>
@@ -432,32 +299,12 @@ object MutantQueries {
           .select(col("bin"), (col("bin") * 24000).cast("double").as("bin_lo"), col("n"))
           .orderBy("bin")),
 
-    Mutant("filter_between", "boundary",
-      "inclusive date range upper bound made exclusive",
-      "clean", (s, d) =>
-        orders(s, d)
-          .filter(col("o_orderdate") >= lit("1996-01-01").cast(TimestampType) &&
-                  col("o_orderdate") < lit("1996-12-31").cast(TimestampType)) // BUG
-          .select("o_orderkey", "o_orderdate").orderBy("o_orderkey")),
-
-    Mutant("offset", "offset-off-by-one",
-      "pagination offset 31 instead of 30",
-      "clean", (s, d) =>
-        customer(s, d).select("c_custkey", "c_name").orderBy("c_custkey")
-          .offset(31).limit(10)), // BUG
-
     Mutant("set_except", "set-vs-bag",
       "EXCEPT replaced by EXCEPT ALL (bag semantics under duplicate keys)",
       "dupkeys", (s, d) =>
         customer(s, d).select("c_custkey")
           .exceptAll(orders(s, d).select(col("o_custkey").as("c_custkey"))) // BUG
           .orderBy("c_custkey")),
-
-    Mutant("distinct", "dropped-distinct",
-      "distinct projection emits raw duplicate rows",
-      "dupkeys", (s, d) =>
-        orders(s, d).select("o_orderstatus", "o_orderpriority") // BUG: no distinct
-          .orderBy("o_orderstatus", "o_orderpriority")),
 
     Mutant("win_first_last", "frame-truncated",
       "full-partition frame stops at CURRENT ROW (last_order = current row)",
@@ -525,16 +372,6 @@ object MutantQueries {
               .as("tfidf"))
           .orderBy("doc_id", "token")
       }),
-
-    Mutant("split_assign", "boundary",
-      "train/valid split boundary 79 instead of 80",
-      "clean", (s, d) =>
-        documents(s, d)
-          .select(col("doc_id"), expr(splitBucketSpark).as("bucket"))
-          .select(col("doc_id"), expr(
-            "CASE WHEN bucket < 79 THEN 'train' WHEN bucket < 90 THEN 'valid' ELSE 'test' END") // BUG
-            .as("split"))
-          .orderBy("doc_id")),
 
     Mutant("corpus_decontam", "wrong-partition",
       "eval slice selected as doc_id % 100 = 1 instead of 0",
@@ -715,33 +552,6 @@ object MutantQueries {
           .orderBy("node")
       }),
 
-    Mutant("market_basket", "boundary",
-      "pair support threshold 3 instead of 2",
-      "clean", (s, d) => {
-        val items = lineitem(s, d)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-        val okOrders = items.groupBy("ok").agg(count(lit(1)).as("n_items"))
-          .filter(col("n_items").between(2, 25)).select("ok")
-        val capped = items.join(okOrders, Seq("ok"), "left_semi")
-          .localCheckpoint(true) // §19 C1
-        val itemN = capped.groupBy("pk").agg(count(lit(1)).as("n_item"))
-        val totals = capped.agg(countDistinct(col("ok")).as("n_orders"))
-        val pairs = capped.toDF("ok", "a").join(capped.toDF("ok", "b"), "ok")
-          .filter(col("a") < col("b"))
-          .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-          .filter(col("n_ab") >= 3) // BUG
-        pairs
-          .join(itemN.toDF("a", "n_a"), "a")
-          .join(itemN.toDF("b", "n_b"), "b")
-          .crossJoin(broadcast(totals))
-          .withColumn("lift",
-            (col("n_ab") * col("n_orders")).cast(DoubleType) /
-              (col("n_a") * col("n_b")).cast(DoubleType))
-          .orderBy(col("lift").desc, col("a"), col("b")).limit(20)
-          .select(col("a"), col("b"), col("n_ab"), col("n_a"), col("n_b"),
-            r4(col("lift")).as("lift"))
-      }),
-
     Mutant("anomaly_zscore", "wrong-denominator",
       "z-score uses population variance (divide by n, not n-1)",
       "clean", (s, d) => {
@@ -775,13 +585,6 @@ object MutantQueries {
               .as("avg_value"))
           .orderBy("event_type", "hod")),
 
-    Mutant("gql_paginate", "offset-off-by-one",
-      "GraphQL pagination offset 21 instead of 20",
-      "clean", (s, d) => graft.dialects.GraphQL.run(s, d,
-        """{ customer(filter: {c_mktsegment: {in: ["BUILDING", "AUTOMOBILE"]}, c_acctbal: {gt: 1000}},
-                      orderBy: ["c_custkey"], offset: 21, limit: 15) {
-             c_custkey c_name c_mktsegment } }""")), // BUG: offset 21
-
     Mutant("nl_between", "wrong-range",
       "translator regression narrows the price band to 150000..290000",
       "clean", (s, d) => graft.dialects.NlToSql.run(s, d,
@@ -792,8 +595,6 @@ object MutantQueries {
       "clean", (s, d) => graft.dialects.NlToSql.run(s, d,
         "number of orders by status where priority is 2-HIGH")), // BUG
 
-    // NOTE: desc must stay ONE string literal — scripts/mutcheck.py
-    // re-parses these constructor calls from source to group by fixture
     Mutant("nl_where_star", "basis-inflating-route",
       "filter routed through a ONE-TO-MANY hop (lineitem fan-out inflates the sum the routed filter must not change)",
       "clean", (s, d) => {
@@ -859,27 +660,6 @@ object MutantQueries {
           .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
           .agg(outDec(sum(dec(col("l_extendedprice")))).as("revenue")) // BUG
           .orderBy(col("revenue").desc, col("o_orderdate").asc, col("l_orderkey").asc)
-          .limit(10)
-      }),
-
-    Mutant("q_waiting_suppliers", "boundary",
-      "multi-supplier gate >= 3 instead of >= 2",
-      "clean", (s, d) => {
-        val stats = lineitem(s, d).groupBy(col("l_orderkey").as("ok"))
-          .agg(countDistinct(col("l_suppkey")).as("ns"),
-            countDistinct(when(col("l_returnflag") === "R", col("l_suppkey")))
-              .as("nrs"))
-          .filter(col("ns") >= 3 && col("nrs") === 1) // BUG
-          .select("ok")
-        lineitem(s, d).filter(col("l_returnflag") === "R")
-          .join(orders(s, d).filter(col("o_orderstatus") === "F")
-            .select("o_orderkey"), col("l_orderkey") === col("o_orderkey"))
-          .join(stats, col("l_orderkey") === col("ok"), "left_semi")
-          .join(broadcast(supplier(s, d).select("s_suppkey", "s_name")),
-            col("l_suppkey") === col("s_suppkey"))
-          .groupBy("s_name")
-          .agg(count(lit(1)).as("numwait"))
-          .orderBy(col("numwait").desc, col("s_name").asc)
           .limit(10)
       }),
 
@@ -1055,12 +835,6 @@ object MutantQueries {
               "div (2 * n_tokens) AS DOUBLE) / 10000.0) + 0.0").as("score"))
           .orderBy("doc_id")
       }),
-
-    Mutant("sim_ivf_pq", "limit-off-by-one",
-      "rerank rank bound 1 instead of 3 — two of every query's three result rows lost",
-      "clean", (s, d) =>
-        graft.operators.VectorOps.queries("sim_ivf_pq")(s, d)
-          .filter(col("rank") <= 1)), // BUG: the topk limit-off-by-one class
 
     Mutant("sessionize", "knob-dropped-stitch",
       "auto-switch knob mutated to cutoff 0 (bucketed leg selected at fixture scale) with the boundary stitch disabled - proves the gate kills bucketed-leg defects when the knob routes fixtures there",
@@ -1261,39 +1035,11 @@ object MutantQueries {
           ORDER BY l_returnflag NULLS FIRST""")
       }),
 
-    Mutant("gql_filter_ops", "exclusive-between",
-      "between lowered to exclusive bounds (> <) — the inclusive-endpoint contract broken on both ends",
-      "ties", (s, d) => {
-        graft.sources.TableRegistry.registerAll(s, d)
-        s.sql("""SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice
-          FROM orders
-          WHERE o_orderpriority NOT IN ('1-URGENT', '5-LOW')
-            AND o_totalprice > 56800 AND o_totalprice < 87800
-            AND o_orderdate IS NOT NULL
-          ORDER BY o_orderkey NULLS FIRST LIMIT 80""")
-      }),
-
     Mutant("nl_fix_count_where", "untyped-literal",
       "the fixture raw-column filter compares against the wrong literal (status P instead of F) — the defect class a schema-typed literal catches at translate time",
       "clean", (s, d) => {
         graft.sources.TableRegistry.registerAll(s, d)
         s.sql("SELECT count(*) AS n_rows FROM orders WHERE o_orderstatus = 'P'")
-      }),
-
-    Mutant("gql_catalog_agg", "dropped-pushed-filter",
-      "the registered-root aggregate loses its nin pre-aggregation filter — every group inflated by the excluded priorities (the defect class a filter silently dropped during catalog resolution would produce)",
-      "clean", (s, d) => {
-        graft.sources.TableRegistry.registerAll(s, d)
-        s.sql("""SELECT * FROM (
-            SELECT o_orderstatus, count(*) AS count,
-              CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 4) AS DOUBLE) AS sum_o_totalprice,
-              CAST(round(CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 4) AS DOUBLE)
-                   / count(*), 4) AS DOUBLE) AS avg_o_totalprice
-            FROM orders
-            WHERE o_totalprice BETWEEN 1000 AND 300000
-            GROUP BY o_orderstatus)
-          WHERE count > 10
-          ORDER BY o_orderstatus NULLS FIRST""")
       }),
 
     Mutant("nl_share_where_not", "existential-negation",
@@ -1325,30 +1071,79 @@ object MutantQueries {
       })
   )
 
-  def byFixture: Map[String, Seq[Mutant]] = mutants.groupBy(_.fixture)
+  def entries: Seq[Entry] = planted ++ mutants
 }
 
-/** Verify's write path, running the MUTANT queries against the requested
-  * fixture dir — so scripts/check.py compares each mutant to the real
-  * oracle and scripts/mutcheck.py asserts the compare FAILS. A mutant that
-  * throws leaves no output, so the audit reports it did-not-run rather than
-  * crediting a kill from an earlier run's directory.
+/** Verify's write path over MutantQueries' entries, each on its fixture:
+  * `outDir/<fixture>/<outName>` and that dir's `oracle_sql.json` (each
+  * output mapped to its key's unchanged oracle), plus the manifest
+  * scripts/mutcheck.py reads, `outDir/mutants.json`: each entry's output
+  * name, key, class and fixture, and a planted entry's op, site and edits.
+  * Each entry runs on its own request session; a planted key's session
+  * gets the `Mutate` rule only after the key is built, so the defect lands
+  * only in the plan the result is written from. An entry that throws, or
+  * whose rule planted nothing, leaves no output: it did not run.
+  *
+  * Usage: graft.MutantVerify <cleanDir> <edgeDir> <outDir>, with each
+  * EdgeFixtures variant in `<edgeDir>/<fixture>`.
   */
 object MutantVerify {
+  import MutantQueries.{Entry, Mutant, Planted}
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: graft.MutantVerify <sfDir> <outDir> [key ...]")
-    val Array(sfDir, outDir, rest @ _*) = args
-    val only: Set[String] = rest.iterator.map(_.trim).filter(_.nonEmpty).toSet
+    require(args.length == 3, "usage: graft.MutantVerify <cleanDir> <edgeDir> <outDir>")
+    val Array(cleanDir, edgeDir, outDir) = args
     val spark = GraftSession("graft-mutant-verify")
-    // output dirs are keyed (key, class), not key alone: round 10 added a
-    // second mutant on several keys (the top-k value-perturbation class),
-    // and same-key dirs would silently overwrite — the checker would then
-    // verify only the LAST mutant while crediting both as killed. Each
-    // (key, class) output maps to ITS base key's unchanged oracle.
-    Verify.writeOutputs(spark, outDir, MutantQueries.mutants
-      .filter(m => only.isEmpty || only(m.key))
-      .map(m => (MutantQueries.outName(m), () => m.fn(spark, sfDir), m.key)))
+    run(spark, f => if (f == "clean") cleanDir else s"$edgeDir/$f", outDir, MutantQueries.entries)
     spark.stop()
+  }
+
+  /** Runs `entries` on the fixture dirs `dirOf` names and writes their
+    * outputs and the manifest under `outDir`; returns each planted
+    * entry's edits by output name.
+    */
+  def run(spark: SparkSession, dirOf: String => String, outDir: String,
+          entries: Seq[Entry]): Map[String, Seq[String]] = {
+    val rules = scala.collection.mutable.Map.empty[String, Mutate]
+    for ((fixture, group) <- entries.groupBy(_.fixture)) {
+      val d = dirOf(fixture)
+      Verify.writeOutputs(spark, s"$outDir/$fixture", group.map(e => (e.outName, () => {
+        // a session per entry: no entry reads the views another registered
+        // on another fixture
+        val sess = GraftSession.request(spark)
+        e match {
+          case m: Mutant => m.fn(sess, d)
+          case p: Planted =>
+            val df = SparkEntry.queries(p.key)(sess, d)
+            // a key served through Server.handle answers on a request
+            // session of its own: the rule goes to the session that plans df
+            require(df.sparkSession ne spark, s"${p.key} answered on the root session")
+            val rule = rules.getOrElseUpdate(p.outName, Mutate(p.op, p.site))
+            df.sparkSession.experimental.extraOptimizations = Seq(rule)
+            df
+        }
+      }, e.key)))
+    }
+    val planted = entries.collect { case p: Planted => p }
+    val edits = planted.map(p => p.outName -> rules.get(p.outName).fold(Seq.empty[String])(_.planted)).toMap
+    for (p <- planted if edits(p.outName).isEmpty) {
+      System.err.println(s"[mutant] ${p.outName}: Mutate(${p.op}, ${p.site}) planted nothing")
+      Verify.rm(new java.io.File(s"$outDir/${p.fixture}/${p.outName}"))
+    }
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifest = mapper.createArrayNode()
+    entries.foreach { e =>
+      val o = manifest.addObject().put("name", e.outName).put("key", e.key)
+        .put("class", e.clazz).put("fixture", e.fixture)
+      e match {
+        case p: Planted =>
+          val a = o.put("op", p.op).put("site", p.site).putArray("planted")
+          edits(p.outName).foreach(a.add(_: String))
+        case _: Mutant =>
+      }
+    }
+    Files.writeString(Paths.get(outDir, "mutants.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(manifest))
+    edits
   }
 }

@@ -37,9 +37,6 @@ object Verify {
       try query().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
         rm(new java.io.File(s"$outDir/$name"))
       }
     }
@@ -52,5 +49,9 @@ object Verify {
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       mapper.writeValueAsString(json))
+  }
+
+  private[graft] def rm(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
   }
 }

@@ -79,6 +79,23 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(sourcesContaining("GraftFunctions.register(").isEmpty)
   }
 
+  test("only MUTCHECK plants plan defects: no session but MutantVerify's request sessions gets a rule") {
+    val mutcheck = Seq("graft/MutantQueries.scala", "graft/plans/Mutate.scala")
+    assert(sourcesContaining("extraOptimizations") === mutcheck)
+    assert(sourcesContaining("Mutate(") === mutcheck)
+    // GraftExtensions, which every session installs, injects functions
+    // only: no optimizer, analyzer or planner rule
+    val injects = raw"\.inject(\w+)".r
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root)
+    try assert(files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(p => injects.findAllMatchIn(Files.readString(p)).map(_.group(1))).toSet
+      === Set("Function"))
+    finally files.close()
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    assert(GraftSession.request(spark).experimental.extraOptimizations.isEmpty)
+  }
+
   test("served reads render inside their plan and register only the tables they name") {
     assert(sourcesContaining("toJSON").isEmpty)
     assert(sourcesContaining("registerAll(")
