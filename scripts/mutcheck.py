@@ -4,16 +4,18 @@
 Runs graft.MutantVerify over every MutantQueries entry: planted entries
 (the key itself, with graft.plans.Mutate making one plan edit: a boundary
 comparison, a frame bound, a tie-break, a NULL ordering, a dropped
-distinct/dedup key or conjunct, a limit/offset) and hand-written mutants
-(a copy of the key with a wrong constant, formula, join type, ...), each
-against the fixture that makes its defect observable (clean sf0.01, or an
-EdgeFixtures hostile variant). Then runs the UNCHANGED scripts/check.py
-compare and requires it to FAIL every mutant. A mutant the gate passes
-("survived") is a proven blind spot: the oracle mirrors the bug or the
-fixture lacks the triggering shape. The entries come from the manifest
-MutantVerify writes (target/mutout/mutants.json); a planted entry's
-MUTCHECK.json record carries each planted edit as "Node: before -> after".
-Writes MUTCHECK.json.
+distinct/dedup key or conjunct, a limit/offset, a numeric constant, a
+semi/anti join type) and hand-written mutants (a copy of the key with a
+wrong formula, aggregate or window spec, or a defect inside a checkpoint
+or Derived build), each against the fixture that makes its defect
+observable (clean sf0.01, or an EdgeFixtures hostile variant). Then runs
+the UNCHANGED scripts/check.py compare and requires it to FAIL every
+mutant. A mutant the gate passes ("survived") is a proven blind spot: the
+oracle mirrors the bug or the fixture lacks the triggering shape. The
+entries come from the manifest MutantVerify writes
+(target/mutout/mutants.json); in MUTCHECK.json a planted entry's record
+carries each planted edit as "Node: before -> after", and a hand entry's
+record its `desc`. Writes MUTCHECK.json.
 
 Usage: python3 scripts/mutcheck.py [--skip-gen]
   --skip-gen  reuse target/edgedata01 variants (else regenerates them)
@@ -83,6 +85,8 @@ def main():
                    "msg": (info.get("msg") or "")[:200]}
             if "op" in m:
                 rec.update(op=m["op"], site=m["site"], planted=m["planted"])
+            else:
+                rec["desc"] = m["desc"]
             report["mutants"][f"{key}:{clazz}"] = rec
             if status == "did-not-run":
                 report.setdefault("did_not_run", []).append(f"{key}:{clazz}")

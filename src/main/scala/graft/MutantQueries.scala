@@ -32,28 +32,14 @@ import java.nio.file.{Files, Paths}
   *  - [[Planted]]: the key itself, unchanged, with `graft.plans.Mutate(op,
   *    site)` making one mechanical edit to the plan its result is written
   *    from. Construction (eager jobs, checkpoints, `Derived` builds) runs
-  *    unmutated. Operator → defect class:
-  *
-  *    - `cmp`: `<` ↔ `<=` or `>` ↔ `>=` on one comparison (boundary)
-  *    - `frame`: one literal window-frame bound one step inward, lower +1
-  *      or upper −1, a ROWS frame's CURRENT ROW counting as 0
-  *      (frame-off-by-one)
-  *    - `tiebreak`: reverse the last key of a Sort or window ORDER BY with
-  *      ≥ 2 keys, the deterministic face of a dropped tie-break
-  *      (wrong-tiebreak)
-  *    - `nulls`: flip NULLS FIRST/LAST on one Sort key (null-ordering)
-  *    - `dedup`: drop a DISTINCT aggregate's distinct, an aggregate-free
-  *      GROUP BY (a distinct), or one window PARTITION BY key
-  *      (dropped-distinct, dropped-dedup-key)
-  *    - `conjunct`: drop one conjunct of a Filter or Join condition
-  *      (dropped-join-key, dropped-pushed-filter)
-  *    - `limit`: one LIMIT or OFFSET literal +1 (limit-off-by-one,
-  *      offset-off-by-one)
+  *    unmutated. `Mutate.ops` maps each operator to its edit and the
+  *    defect classes it stands in for.
   *
   *  - [[Mutant]]: a hand-written copy of the key with the defect in its
   *    code (`// BUG`), for defects those operators do not express: a wrong
-  *    constant, formula, join type or window width, or a defect inside a
-  *    `Derived` build, which construction runs unmutated.
+  *    formula, aggregate or window spec, a constant that never reaches the
+  *    written plan, or a defect inside a checkpoint or `Derived` build,
+  *    which construction runs unmutated.
   */
 object MutantQueries {
 
@@ -99,17 +85,23 @@ object MutantQueries {
     Planted("topk", "limit-off-by-one", "clean", "limit", 0),
     Planted("sim_ivf_pq", "limit-off-by-one", "clean", "cmp", 0),
     Planted("offset", "offset-off-by-one", "clean", "limit", 1),
-    Planted("gql_paginate", "offset-off-by-one", "clean", "limit", 1))
+    Planted("gql_paginate", "offset-off-by-one", "clean", "limit", 1),
+    Planted("agg_median", "rank-off-by-one", "clean", "const", 0),
+    // the ELSE arm's remainder: the one the window start is computed from
+    Planted("stream_tumbling", "window-width", "clean", "const", 9),
+    Planted("graph_pagerank", "wrong-constant", "clean", "const", 1),
+    Planted("agg_percentile", "wrong-quantile", "clean", "const", 6),
+    Planted("agg_histogram", "wrong-constant", "clean", "const", 2),
+    Planted("win_lag_lead", "wrong-offset", "clean", "const", 0),
+    Planted("corpus_decontam", "wrong-partition", "clean", "const", 8),
+    Planted("vec_quantize", "wrong-constant", "clean", "const", 4),
+    Planted("dedup_semantic", "wrong-threshold", "clean", "const", 1),
+    Planted("dq_freshness", "wrong-unit", "clean", "const", 0),
+    Planted("fn_date", "wrong-interval", "clean", "const", 0),
+    Planted("join_semi", "join-type", "clean", "join", 0),
+    Planted("join_anti", "join-type", "clean", "join", 0))
 
   val mutants: Seq[Mutant] = Seq(
-
-    Mutant("join_semi", "join-type",
-      "left-semi replaced by inner + project (fan-out on multi-match)",
-      "clean", (s, d) =>
-        customer(s, d).join(
-            orders(s, d).filter(col("o_orderstatus") === "F"),
-            col("c_custkey") === col("o_custkey"), "inner") // BUG
-          .select("c_custkey", "c_name").orderBy("c_custkey")),
 
     Mutant("agg_avg", "wrong-denominator",
       "average divides by count(col) instead of count(*)",
@@ -121,22 +113,6 @@ object MutantQueries {
             r4(sum(dec(col("l_extendedprice"))).cast(DoubleType) /
               count(col("l_extendedprice"))).as("avg_price")) // BUG
           .orderBy("l_linestatus")),
-
-    Mutant("agg_median", "rank-off-by-one",
-      "median picks rank (n+2) div 2 instead of (n+1) div 2",
-      "clean", (s, d) => {
-        val w = Window.partitionBy("o_orderstatus")
-          .orderBy(col("o_totalprice"), col("o_orderkey"))
-        val wN = Window.partitionBy("o_orderstatus")
-        orders(s, d)
-          .filter(col("o_totalprice").isNotNull)
-          .withColumn("rn", row_number().over(w))
-          .withColumn("n", count(lit(1)).over(wN))
-          .filter(col("rn") === expr("(n + 2) div 2")) // BUG
-          .select(col("o_orderstatus"), col("n").as("n_orders"),
-            col("o_totalprice").as("median_price"))
-          .orderBy("o_orderstatus")
-      }),
 
     Mutant("agg_entropy", "wrong-total",
       "entropy normalizes by count(*) instead of the sum of typed counts",
@@ -167,44 +143,6 @@ object MutantQueries {
           .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
             sk.as("surrogate_key"))
           .orderBy("l_orderkey", "l_linenumber", "surrogate_key")
-      }),
-
-    Mutant("stream_tumbling", "window-width",
-      "tumbling window 6 minutes instead of 5",
-      "clean", (s, d) =>
-        events(s, d)
-          .groupBy(window(col("ts"), "6 minutes"), col("event_type")) // BUG
-          .agg(count(lit(1)).as("cnt"), outDec(sum(dec(col("value")))).as("sum_val"))
-          .select(col("window.start").as("w_start"), col("event_type"),
-            col("cnt"), col("sum_val"))
-          .orderBy("w_start", "event_type")),
-
-    Mutant("graph_pagerank", "wrong-constant",
-      "damping 0.80 instead of 0.85",
-      "clean", (s, d) => {
-        val e0 = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-          .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .filter(col("o_custkey").isNotNull && col("l_suppkey").isNotNull)
-          .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        val ed = edges.join(deg, "src")
-        val nodes = customer(s, d).select((col("c_custkey") * 2).as("node"))
-          .union(supplier(s, d).select((col("s_suppkey") * 2 + 1).as("node")))
-        var ranks = nodes.withColumn("rank_u", lit(1000000L))
-        for (_ <- 1 to 3) {
-          val contrib = ed.join(ranks, ed("src") === ranks("node"))
-            .select(ed("dst"), expr("rank_u DIV deg").as("c"))
-            .groupBy("dst").agg(sum(col("c")).as("cs"))
-          ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-            .select(nodes("node"),
-              (lit(150000L) + expr("(16 * coalesce(cs, 0)) DIV 20")).as("rank_u")) // BUG
-        }
-        ranks.select(col("node"),
-            (col("rank_u").cast(DoubleType) / 1000000.0).as("rank"))
-          .orderBy("node")
       }),
 
     Mutant("sim_cosine_topk", "truncated-dim-loop",
@@ -243,14 +181,6 @@ object MutantQueries {
     // round 9: one hand mutant per (defect class × module) cell still
     // uncovered, favouring keys whose oracles re-derive complex formulations
 
-    Mutant("join_anti", "join-type",
-      "left-anti replaced by left-semi (complement set emitted)",
-      "clean", (s, d) =>
-        customer(s, d).join(
-            orders(s, d).filter(col("o_orderstatus") === "F"),
-            col("c_custkey") === col("o_custkey"), "left_semi") // BUG
-          .select("c_custkey", "c_name").orderBy("c_custkey")),
-
     Mutant("subq_scalar", "wrong-aggregate",
       "scalar subquery uses max instead of avg",
       "clean", (s, d) => {
@@ -259,16 +189,6 @@ object MutantQueries {
                  WHERE l_quantity > 1.8 * (SELECT max(l_quantity) FROM lineitem)
                  ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST, l_quantity NULLS FIRST""")
       }),
-
-    Mutant("agg_percentile", "wrong-quantile",
-      "p90 computed as percentile 0.89",
-      "clean", (s, d) =>
-        lineitem(s, d).groupBy("l_returnflag")
-          .agg(
-            r4(expr("percentile(l_quantity, 0.25)")).as("p25_qty"),
-            r4(expr("percentile(l_quantity, 0.5)")).as("median_qty"),
-            r4(expr("percentile(l_extendedprice, 0.89)")).as("p90_price")) // BUG
-          .orderBy("l_returnflag")),
 
     Mutant("agg_rollup", "dropped-grouping-set",
       "rollup flattened to a plain group-by (subtotal and grand-total rows missing)",
@@ -290,15 +210,6 @@ object MutantQueries {
             (r4(covar_samp(col("l_quantity"), col("l_extendedprice"))) + lit(0.0)).as("cov_qp"))
           .orderBy("l_returnflag")),
 
-    Mutant("agg_histogram", "wrong-constant",
-      "bin width 24000 instead of 25000",
-      "clean", (s, d) =>
-        orders(s, d)
-          .select(floor(col("o_totalprice") / 24000.0).cast("long").as("bin")) // BUG
-          .groupBy("bin").agg(count(lit(1)).as("n"))
-          .select(col("bin"), (col("bin") * 24000).cast("double").as("bin_lo"), col("n"))
-          .orderBy("bin")),
-
     Mutant("set_except", "set-vs-bag",
       "EXCEPT replaced by EXCEPT ALL (bag semantics under duplicate keys)",
       "dupkeys", (s, d) =>
@@ -317,17 +228,6 @@ object MutantQueries {
             first(col("o_orderkey")).over(w).as("first_order"),
             last(col("o_orderkey")).over(w).as("last_order"))
           .orderBy("o_orderkey")
-      }),
-
-    Mutant("win_lag_lead", "wrong-offset",
-      "lag/lead offset 2 instead of 1",
-      "clean", (s, d) => {
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        events(s, d)
-          .select(col("event_id"), col("user_id"),
-            lag(col("value"), 2).over(w).as("prev_value"), // BUG
-            lead(col("event_type"), 2).over(w).as("next_type")) // BUG
-          .orderBy("event_id")
       }),
 
     Mutant("stream_session", "window-width",
@@ -373,21 +273,6 @@ object MutantQueries {
           .orderBy("doc_id", "token")
       }),
 
-    Mutant("corpus_decontam", "wrong-partition",
-      "eval slice selected as doc_id % 100 = 1 instead of 0",
-      "clean", (s, d) => {
-        val sh = graft.operators.Derived.hashedShingles(s, d)
-        val isEval = col("doc_id") % 100 === 1 && col("doc_id") < 2000 // BUG
-        val evalSh = sh.filter(isEval)
-          .select(col("sh"), col("doc_id").as("eval_id"))
-        sh.filter(!isEval)
-          .join(broadcast(evalSh), "sh")
-          .groupBy("doc_id")
-          .agg(countDistinct(col("sh")).as("n_hit_shingles"),
-            countDistinct(col("eval_id")).as("n_eval_docs"))
-          .orderBy("doc_id")
-      }),
-
     Mutant("text_lang_stats", "wrong-denominator",
       "avg chars divides by count(n_chars) instead of count(*)",
       "nulls", (s, d) =>
@@ -398,61 +283,6 @@ object MutantQueries {
               .as("avg_chars"),
             countDistinct(col("source")).as("n_sources"))
           .orderBy("lang")),
-
-    Mutant("vec_quantize", "wrong-constant",
-      "int8 quantization scaled by 126 instead of 127",
-      "clean", (s, d) =>
-        embeddings(s, d)
-          .withColumn("scale",
-            expr("array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"))
-          .filter(col("scale") > 0)
-          .withColumn("q",
-            expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 126.0 / scale) AS BIGINT))")) // BUG
-          .select(
-            col("vec_id"),
-            r4(col("scale")).as("scale_r"),
-            expr("aggregate(q, 0L, (a, x) -> a + x)").as("q_sum"),
-            expr("CAST(array_max(transform(q, x -> abs(x))) AS BIGINT)").as("q_absmax"),
-            r4(expr(
-              "array_max(zip_with(embedding, q, (x, qi) -> abs(CAST(x AS DOUBLE) - CAST(qi AS DOUBLE) * scale / 126.0)))")) // BUG
-              .as("max_err"))
-          .orderBy("vec_id")),
-
-    Mutant("dedup_semantic", "wrong-threshold",
-      "SemDeDup similarity threshold 0.30 instead of 0.35",
-      "clean", (s, d) => {
-        val dotE = "aggregate(zip_with(%A, %B, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
-        def dt(a: String, b: String) = expr(dotE.replace("%A", a).replace("%B", b))
-        val base = embeddings(s, d)
-          .select(col("vec_id"), col("embedding").as("v"),
-            sqrt(dt("embedding", "embedding")).as("n"))
-        val cents = embeddings(s, d)
-          .filter(col("vec_id") < 8)
-          .select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-            sqrt(dt("embedding", "embedding")).as("cn"))
-        val assign = base.crossJoin(broadcast(cents))
-          .withColumn("ccos", dt("v", "cv") / (col("n") * col("cn")))
-          .select(col("vec_id"), col("v"), col("n"),
-            struct((lit(0d) - round(col("ccos"), 6)).as("nk"), col("c_id")).as("sc"))
-          .groupBy("vec_id")
-          .agg(first(col("v")).as("v"), first(col("n")).as("n"),
-            expr("sort_array(collect_list(sc))[0].c_id").as("cluster"))
-          .localCheckpoint(true) // §19 C14
-        val a = assign.select(col("cluster"), col("vec_id").as("a"),
-          col("v").as("av"), col("n").as("an"))
-        val b = assign.select(col("cluster"), col("vec_id").as("b"),
-          col("v").as("bv"), col("n").as("bn"))
-        val dups = a.join(b, Seq("cluster")).filter(col("a") < col("b"))
-          .withColumn("cos", dt("av", "bv") / (col("an") * col("bn")))
-          .filter(round(col("cos"), 6) >= 0.30) // BUG
-          .select(col("b").as("vec_id")).distinct()
-          .withColumn("dup", lit(true))
-        assign.select("vec_id", "cluster")
-          .join(dups, Seq("vec_id"), "left")
-          .select(col("vec_id"), col("cluster"),
-            coalesce(!col("dup"), lit(true)).as("keep"))
-          .orderBy("vec_id")
-      }),
 
     Mutant("sim_ivf", "truncated-probe",
       "IVF probes 1 coarse cluster instead of nprobe 2",
@@ -512,29 +342,25 @@ object MutantQueries {
 
     Mutant("graph_degrees", "dropped-distinct",
       "degree counts over raw order-lineitem multiplicity (edge dedup dropped)",
-      "clean", (s, d) => {
-        val e0 = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
+      "clean", (s, d) =>
+        orders(s, d).select(col("o_orderkey"), col("o_custkey"))
           .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
             col("l_orderkey") === col("o_orderkey"))
           .filter(col("o_custkey").isNotNull && col("l_suppkey").isNotNull)
           .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
           // BUG: no .distinct()
-        val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        edges.groupBy("src").agg(count(lit(1)).as("degree"))
+          .select(explode(array(
+            struct(col("src"), col("dst")),
+            struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"))
+          .groupBy("src").agg(count(lit(1)).as("degree"))
           .groupBy("degree").agg(count(lit(1)).as("n_vertices"))
-          .orderBy("degree")
-      }),
+          .orderBy("degree")),
 
     Mutant("graph_bfs", "wrong-source-set",
       "BFS seeded from custkey % 100 = 1 instead of 0",
       "clean", (s, d) => {
-        val e0 = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-          .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .filter(col("o_custkey").isNotNull && col("l_suppkey").isNotNull)
-          .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = graft.operators.GraphOps.tradeEdges(s, d)
         val srcs = customer(s, d)
           .filter(col("c_custkey") % 100 === 1) // BUG
           .select((col("c_custkey") * 2).as("node"))
@@ -628,21 +454,6 @@ object MutantQueries {
           .orderBy("reasons")
       }),
 
-    Mutant("dq_freshness", "wrong-unit",
-      "lag computed in tenth-minutes (divisor 6e6 instead of 6e7)",
-      "clean", (s, d) => {
-        val per = events(s, d).groupBy("event_type")
-          .agg(max(col("ts")).as("last_ts"), count(lit(1)).as("n_events"))
-        val wAll = Window.orderBy("event_type")
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        val lagMin =
-          r4((unix_micros(max(col("last_ts")).over(wAll)) - unix_micros(col("last_ts")))
-            .cast(DoubleType) / lit(6.0e6)) // BUG
-        per.select(col("event_type"), col("n_events"), col("last_ts"),
-            lagMin.as("lag_minutes"), (lagMin > lit(30.0)).as("stale"))
-          .orderBy("event_type")
-      }),
-
     Mutant("q_shipping_priority", "wrong-formula",
       "revenue forgets the (1 - discount) factor",
       "clean", (s, d) => {
@@ -662,25 +473,6 @@ object MutantQueries {
           .orderBy(col("revenue").desc, col("o_orderdate").asc, col("l_orderkey").asc)
           .limit(10)
       }),
-
-    Mutant("fn_date", "wrong-interval",
-      "plus-30-days column adds 29",
-      "clean", (s, d) =>
-        orders(s, d).select(
-          col("o_orderkey"),
-          year(col("o_orderdate")).cast(LongType).as("y"),
-          month(col("o_orderdate")).cast(LongType).as("m"),
-          dayofmonth(col("o_orderdate")).cast(LongType).as("dom"),
-          dayofweek(col("o_orderdate")).cast(LongType).as("dow1"),
-          date_trunc("month", col("o_orderdate")).as("month_start"),
-          date_add(col("o_orderdate").cast(DateType), 29).as("plus30"), // BUG
-          datediff(lit("2002-01-01").cast(DateType), col("o_orderdate").cast(DateType))
-            .cast(LongType).as("days_to_2002"),
-          last_day(col("o_orderdate")).as("eom"),
-          make_date(year(col("o_orderdate")), month(col("o_orderdate")), lit(1)).as("made"),
-          col("o_orderdate").cast(DateType).as("as_date"),
-          unix_micros(col("o_orderdate")).as("epoch_us"))
-        .orderBy("o_orderkey")),
 
     Mutant("udaf_typed", "wrong-denominator",
       "custom variance aggregator silently replaced by the population variance",
@@ -1078,7 +870,8 @@ object MutantQueries {
   * `outDir/<fixture>/<outName>` and that dir's `oracle_sql.json` (each
   * output mapped to its key's unchanged oracle), plus the manifest
   * scripts/mutcheck.py reads, `outDir/mutants.json`: each entry's output
-  * name, key, class and fixture, and a planted entry's op, site and edits.
+  * name, key, class and fixture, a planted entry's op, site and edits, and
+  * a hand entry's `desc`.
   * Each entry runs on its own request session; a planted key's session
   * gets the `Mutate` rule only after the key is built, so the defect lands
   * only in the plan the result is written from. An entry that throws, or
@@ -1139,7 +932,7 @@ object MutantVerify {
         case p: Planted =>
           val a = o.put("op", p.op).put("site", p.site).putArray("planted")
           edits(p.outName).foreach(a.add(_: String))
-        case _: Mutant =>
+        case m: Mutant => o.put("desc", m.desc)
       }
     }
     Files.writeString(Paths.get(outDir, "mutants.json"),

@@ -37,7 +37,7 @@ object GraphOps {
     * shared by pagerank and the degree profile so the two metrics are
     * guaranteed to describe the same graph.
     */
-  private def tradeEdges(s: SparkSession, d: String): DataFrame = {
+  private[graft] def tradeEdges(s: SparkSession, d: String): DataFrame = {
     // round 17: the one-direction distinct edge list is the materialized
     // Derived.tradeEdges artifact (pagerank/degrees/bfs each re-derived
     // it per key), and BOTH directions now fan out IN-ROW from one scan —

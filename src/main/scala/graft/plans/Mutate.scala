@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types._
 
 /** MUTCHECK's defect planter: an optimizer rule that makes ONE mechanical
   * edit to the optimized plan of a key, so the oracle gate can be asked
@@ -54,10 +55,34 @@ final case class Mutate(op: String, site: Int) extends Rule[LogicalPlan] {
 
 object Mutate extends PredicateHelper {
 
-  /** The operators; `graft.MutantQueries` lists each one's edit and the
-    * defect class it stands in for.
+  /** Each operator, with the defect classes its edit stands in for:
+    *  - `cmp`: `<` ↔ `<=` or `>` ↔ `>=` on one comparison
+    *  - `frame`: one literal window-frame bound one step inward, lower +1
+    *    or upper −1, a ROWS frame's CURRENT ROW counting as 0
+    *  - `tiebreak`: reverse the last key of a Sort or window ORDER BY with
+    *    ≥ 2 keys, the deterministic face of a dropped tie-break
+    *  - `nulls`: flip NULLS FIRST/LAST on one Sort key
+    *  - `dedup`: drop a DISTINCT aggregate's distinct, an aggregate-free
+    *    GROUP BY (a distinct), or one window PARTITION BY key
+    *  - `conjunct`: drop one conjunct of a Filter or Join condition
+    *  - `limit`: one LIMIT or OFFSET literal +1
+    *  - `const`: one numeric literal one unit up in its last significant
+    *    digit, in its own type (17 → 18, 0.35 → 0.36, 6.0E7 → 7.0E7); not
+    *    a LIMIT/OFFSET literal, a frame bound, or a value that no longer fits
+    *  - `join`: a LEFT SEMI join made INNER under a Project of the left
+    *    output, or a LEFT ANTI join made LEFT SEMI
     */
-  val ops: Seq[String] = Seq("cmp", "frame", "tiebreak", "nulls", "dedup", "conjunct", "limit")
+  val ops: Map[String, Set[String]] = Map(
+    "cmp" -> Set("boundary", "exclusive-between", "limit-off-by-one"),
+    "frame" -> Set("frame-off-by-one"),
+    "tiebreak" -> Set("wrong-tiebreak", "boundary"),
+    "nulls" -> Set("null-ordering"),
+    "dedup" -> Set("dropped-distinct", "dropped-dedup-key"),
+    "conjunct" -> Set("dropped-join-key", "dropped-pushed-filter"),
+    "limit" -> Set("limit-off-by-one", "offset-off-by-one"),
+    "const" -> Set("wrong-constant", "rank-off-by-one", "window-width", "wrong-quantile",
+      "wrong-offset", "wrong-partition", "wrong-threshold", "wrong-unit", "wrong-interval"),
+    "join" -> Set("join-type"))
 
   private[graft] val Tag = TreeNodeTag[String]("graft.mutate")
 
@@ -127,6 +152,71 @@ object Mutate extends PredicateHelper {
         Seq(Edit(o, s"OFFSET $n", s"OFFSET ${n + 1}", () => Offset(Literal(n + 1), bumpLocal(child))))
       case _ => Nil
     }
+    case "const" => node match {
+      case _: GlobalLimit | _: LocalLimit | _: Offset => Nil
+      case _ => constants(node)
+    }
+    case "join" => node match {
+      case j @ Join(l, _, LeftSemi, _, _) =>
+        Seq(Edit(j, "LEFT SEMI", "INNER, projected to the left output",
+          () => Project(l.output, j.copy(joinType = Inner))))
+      case j @ Join(_, _, LeftAnti, _, _) =>
+        Seq(Edit(j, "LEFT ANTI", "LEFT SEMI", () => j.copy(joinType = LeftSemi)))
+      case _ => Nil
+    }
+  }
+
+  /** One edit per numeric literal of `node` that [[bump]] can move, in
+    * expression pre-order, frame bounds left out; each shows the
+    * literal's parent expression before and after.
+    */
+  private def constants(node: LogicalPlan): Seq[Edit] = {
+    def hits(e: Expression, parent: Expression): Seq[(Literal, Expression)] = e match {
+      case _: SpecifiedWindowFrame => Nil
+      case l: Literal => bump(l).map(_ => (l, parent)).toSeq
+      case _ => e.children.flatMap(hits(_, e))
+    }
+    val found = node.expressions.flatMap(e => hits(e, e))
+    found.indices.map { i =>
+      val (l, parent) = found(i)
+      val after = if (parent eq l) bump(l).get else parent.mapChildren(c => if (c eq l) bump(l).get else c)
+      Edit(node, parent.sql, after.sql, () => {
+        var k = -1
+        def go(e: Expression): Expression = e match {
+          case _: SpecifiedWindowFrame => e
+          case m: Literal if bump(m).isDefined =>
+            k += 1
+            if (k == i) bump(m).get else m
+          case _ => e.mapChildren(go)
+        }
+        node.mapExpressions(go)
+      })
+    }
+  }
+
+  /** `l` one unit up in its last significant digit, in its own type; None
+    * for a NULL, a non-numeric literal, or a value that no longer fits.
+    */
+  private def bump(l: Literal): Option[Literal] = {
+    def up(b: java.math.BigDecimal): java.math.BigDecimal = {
+      val t = b.stripTrailingZeros
+      t.add(java.math.BigDecimal.ONE.scaleByPowerOfTen(-t.scale))
+    }
+    def big(v: Any): java.math.BigDecimal = new java.math.BigDecimal(v.toString)
+    try (l.value, l.dataType) match {
+      case (v: Byte, ByteType) => Some(Literal(up(big(v)).byteValueExact))
+      case (v: Short, ShortType) => Some(Literal(up(big(v)).shortValueExact))
+      case (v: Int, IntegerType) => Some(Literal(up(big(v)).intValueExact))
+      case (v: Long, LongType) => Some(Literal(up(big(v)).longValueExact))
+      case (v: Float, FloatType) if java.lang.Float.isFinite(v) =>
+        Some(up(big(v)).floatValue).filter(java.lang.Float.isFinite).map(Literal(_))
+      case (v: Double, DoubleType) if java.lang.Double.isFinite(v) =>
+        Some(up(big(v)).doubleValue).filter(java.lang.Double.isFinite).map(Literal(_))
+      case (v: Decimal, t: DecimalType) =>
+        Some(up(v.toJavaBigDecimal).setScale(t.scale)).filter(_.precision <= t.precision)
+          .map(b => Literal(Decimal(b), t))
+      case _ => None
+    } catch { case _: ArithmeticException => None }
   }
 
   private def bumpLocal(p: LogicalPlan): LogicalPlan = p match {

@@ -30,7 +30,9 @@ class MutantRegistrySpec extends AnyFunSuite {
   }
 
   test("every Mutate operator is used, and every planted entry names one") {
-    assert(planted.map(_.op).toSet === Mutate.ops.toSet)
+    assert(planted.map(_.op).toSet === Mutate.ops.keySet)
     assert(planted.forall(_.site >= 0))
+    // and the operator stands for the entry's defect class
+    for (p <- planted) assert(Mutate.ops(p.op)(p.clazz), s"${p.outName}: ${p.op} does not stand for ${p.clazz}")
   }
 }

@@ -3,16 +3,18 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.MutantQueries.Planted
+import graft.MutantQueries.{Mutant, Planted}
 import graft.plans.Mutate
 
 /** `graft.plans.Mutate`, MUTCHECK's plan-level defect planter, and the way
   * `MutantVerify` runs a planted entry: each operator's edit shows in the
   * answer, the rule plants once through its FixedPoint batch, a planted
-  * key keeps its schema, a site past the last writes nothing, and the
-  * key's construction (here, a `Derived` build) runs unmutated.
+  * key keeps its schema, a site past the last writes nothing, a hand
+  * entry's `desc` reaches the manifest, and the key's construction (here,
+  * a `Derived` build) runs unmutated.
   */
 class MutateSpec extends AnyFunSuite {
   val spark = TestSpark.spark
@@ -74,6 +76,42 @@ class MutateSpec extends AnyFunSuite {
     assert(longs(rows) === (0L to 6L))
   }
 
+  test("const moves one numeric literal up one unit in its last digit, keeping its type") {
+    val (clean, rows, rule) = plant("const", 0)(_.range(10).toDF("id").filter("id <= 4"))
+    assert(clean.size === 5 && rows.size === 6)
+    assert(rule.planted === Seq("Filter: (id <= 4L) -> (id <= 5L)"))
+
+    val (c2, r2, rule2) = plant("const", 0)(_.range(1).selectExpr("id + 0.35D AS x"))
+    assert(c2.map(_.getDouble(0)) === Seq(0.35) && r2.map(_.getDouble(0)) === Seq(0.36))
+    assert(rule2.planted === Seq("Project: (CAST(id AS DOUBLE) + 0.35D) -> (CAST(id AS DOUBLE) + 0.36D)"))
+  }
+
+  test("const leaves strings, dates, LIMIT literals, frame bounds and a value with no room alone") {
+    val base = spark.range(5).selectExpr("id", "'a' AS s", "DATE'2024-01-01' AS dt", "2147483647 AS m",
+      "max(id) OVER (ORDER BY id ROWS BETWEEN 2 PRECEDING AND 1 FOLLOWING) AS w")
+    assert(Mutate.sites("const", base.limit(3).queryExecution.optimizedPlan) === Nil)
+    assert(Mutate.sites("const", base.selectExpr("id + 1 AS one").limit(3).queryExecution.optimizedPlan) ===
+      Seq("Project: (id + 1L) -> (id + 2L)"))
+  }
+
+  test("join: semi made inner keeps the left schema and repeats multi-match rows; anti made semi is the complement") {
+    def joined(kind: String)(s: SparkSession) =
+      s.range(3).join(s.range(6).selectExpr("id % 2 AS k"), col("id") === col("k"), kind)
+    val (clean, rows, rule) = plant("join", 0)(joined("left_semi"))
+    assert(clean.map(_.getLong(0)).sorted === Seq(0L, 1L))
+    assert(rows.map(_.getLong(0)).sorted === Seq(0L, 0L, 0L, 1L, 1L, 1L))
+    assert(rule.planted === Seq("Join: LEFT SEMI -> INNER, projected to the left output"))
+    val sess = GraftSession.request(spark)
+    val df = joined("left_semi")(sess)
+    sess.experimental.extraOptimizations = Seq(Mutate("join", 0))
+    assert(df.queryExecution.optimizedPlan.schema.map(f => (f.name, f.dataType)) ===
+      df.schema.map(f => (f.name, f.dataType)))
+
+    val (anti, flipped, _) = plant("join", 0)(joined("left_anti"))
+    assert(anti.map(_.getLong(0)) === Seq(2L))
+    assert(flipped.map(_.getLong(0)).sorted === Seq(0L, 1L))
+  }
+
   test("MutantVerify: a planted limit on topk writes 11 rows in topk's schema; a site past the last writes nothing") {
     val out = Files.createTempDirectory("graft_mutate").toString
     val topk = SparkEntry.queries("topk")(spark, d)
@@ -81,7 +119,9 @@ class MutateSpec extends AnyFunSuite {
     val edits = MutantVerify.run(spark, _ => d, out, Seq(
       Planted("topk", "limit-off-by-one", "clean", "limit", 0),
       Planted("distinct", "dropped-distinct", "clean", "dedup", 0),
-      Planted("topk", "past-the-last-site", "clean", "limit", over)))
+      Planted("topk", "past-the-last-site", "clean", "limit", over),
+      Mutant("topk", "short-by-one", "topk cut to 9 rows", "clean",
+        (s, dd) => SparkEntry.queries("topk")(s, dd).limit(9))))
     assert(edits("topk__limit-off-by-one") === Seq("GlobalLimit: LIMIT 10 -> LIMIT 11"))
     val written = spark.read.parquet(s"$out/clean/topk__limit-off-by-one")
     assert(written.count() === 11)
@@ -94,9 +134,11 @@ class MutateSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(out, "clean", "topk__past-the-last-site")))
     val manifest = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readString(Paths.get(out, "mutants.json")))
-    assert(manifest.size === 3)
+    assert(manifest.size === 4)
     assert(manifest.get(0).get("planted").get(0).asText === "GlobalLimit: LIMIT 10 -> LIMIT 11")
     assert(manifest.get(2).get("planted").size === 0)
+    assert(manifest.get(3).get("desc").asText === "topk cut to 9 rows")
+    assert(spark.read.parquet(s"$out/clean/topk__short-by-one").count() === 9)
   }
 
   test("a planted mutant's construction runs unmutated: its Derived artifact stays clean") {
